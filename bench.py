@@ -92,7 +92,7 @@ def main() -> None:
 
     # north metric (BASELINE.json): PageRank edges-processed/sec to 1e-6
     # convergence on the source-repo file graph — deterministic synthetic
-    # (repo, path, commit, lang, content) table → Arrow-UDF import
+    # (repo, path, commit, lang, content) table → column-code import
     # extraction → file→file edge DataFrame (5M files, ~20M edges — the
     # BASELINE.md headline input; at 2M edges the constant driver floor
     # dominates the metric ~8x, see BASELINE.md decomposition).

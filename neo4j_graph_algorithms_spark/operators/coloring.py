@@ -62,6 +62,7 @@ from ..plans.checkpoint import (
     aqe_suspended,
     truncate_lineage,
 )
+from ..plans.rows import one_row
 
 #: candidate-window cap — bounds the per-vertex candidate array a hub
 #: builds while keeping same-color collision probability ~1/CAP
@@ -90,11 +91,12 @@ class ColoringResult:
             if self.color_count is not None
             else self.colors.select("color").distinct().count()
         )
-        return self.colors.sparkSession.createDataFrame(
-            [(nodes, k, self.iterations_ran, self.load_millis,
-              self.compute_millis, self.write_millis)],
+        return one_row(
+            self.colors.sparkSession,
             "nodes long, color_count long, iterations long, "
             "load_millis long, compute_millis long, write_millis long",
+            nodes, k, self.iterations_ran, self.load_millis,
+            self.compute_millis, self.write_millis,
         )
 
 

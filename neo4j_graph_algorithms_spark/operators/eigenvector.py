@@ -60,6 +60,7 @@ from ..plans.checkpoint import (
     aqe_suspended,
     truncate_lineage,
 )
+from ..plans.rows import one_row
 
 
 @dataclass
@@ -70,9 +71,12 @@ class EigenvectorResult:
     metrics: list[dict] = field(default_factory=list)
 
     def stats(self) -> DataFrame:
-        return self.scores.sparkSession.createDataFrame(
-            [(self.scores.count(), self.iterations_ran, self.converged)],
+        return one_row(
+            self.scores.sparkSession,
             "nodes long, iterations long, converged boolean",
+            self.scores.count(),
+            self.iterations_ran,
+            self.converged,
         )
 
 

@@ -53,6 +53,7 @@ from ..plans.checkpoint import (
     aqe_suspended,
     truncate_lineage,
 )
+from ..plans.rows import one_row
 
 
 @dataclass
@@ -62,9 +63,11 @@ class HitsResult:
     metrics: list[dict] = field(default_factory=list)
 
     def stats(self) -> DataFrame:
-        return self.scores.sparkSession.createDataFrame(
-            [(self.scores.count(), self.iterations_ran)],
+        return one_row(
+            self.scores.sparkSession,
             "nodes long, iterations long",
+            self.scores.count(),
+            self.iterations_ran,
         )
 
 

@@ -39,6 +39,7 @@ from ..plans.checkpoint import (
     aqe_suspended,
     truncate_lineage,
 )
+from ..plans.rows import one_row
 
 OUTGOING = "OUTGOING"
 INCOMING = "INCOMING"
@@ -59,19 +60,16 @@ class LabelPropagationResult:
         """One-row write-mode YIELD parity —
         ``(nodes, iterations, didConverge, loadMillis, computeMillis,
         writeMillis)`` (``results/LabelPropagationStats.java:23-25``)."""
-        return self.labels.sparkSession.createDataFrame(
-            [
-                (
-                    self.labels.count(),
-                    self.iterations_ran,
-                    self.did_converge,
-                    self.load_millis,
-                    self.compute_millis,
-                    self.write_millis,
-                )
-            ],
+        return one_row(
+            self.labels.sparkSession,
             "nodes long, iterations long, did_converge boolean, "
             "load_millis long, compute_millis long, write_millis long",
+            self.labels.count(),
+            self.iterations_ran,
+            self.did_converge,
+            self.load_millis,
+            self.compute_millis,
+            self.write_millis,
         )
 
 

@@ -48,6 +48,7 @@ from ..plans.checkpoint import (
     aqe_suspended,
     truncate_lineage,
 )
+from ..plans.rows import one_row
 
 
 @dataclass
@@ -69,9 +70,12 @@ class MisResult:
             if self.set_size is not None
             else self.members.filter(F.col("in_set")).count()
         )
-        return self.members.sparkSession.createDataFrame(
-            [(nodes, size, self.iterations_ran)],
+        return one_row(
+            self.members.sparkSession,
             "nodes long, set_size long, iterations long",
+            nodes,
+            size,
+            self.iterations_ran,
         )
 
 

@@ -20,50 +20,42 @@ PageRank.java``, proc ``PageRankProc.java:52-56``):
   aggregation makes that unnecessary — we keep float64, which *improves*
   on reference precision while staying inside its test tolerances.
 
-Spark shape per superstep (SURVEY.md §2.2):
+Spark shape — ONE loop, the message fold (``_run_edges_fold``), for
+every variant (plain, weighted, personalized, ArticleRank, durable):
 
-    msgs  = edges ⋈ frontier(src)  →  groupBy(dst).sum(delta/outdeg)
-    state = state ⟕ msgs           →  rank += d·msg ; delta = d·msg
+    msgs_t = edges ⋈ frontier(src)  →  groupBy(dst).sum(push)
+    every k supersteps:  rank += d·msg_t, t in order  (one fold join)
 
 Scale notes (the part that must survive 10^12 edges):
 
 - **co-partitioning = one shuffle per superstep**: edges are persisted
-  hash-partitioned by ``src`` and state by ``id`` on the same partition
-  count, so the scatter join reuses both partitionings with no
-  exchange; the only shuffle is the gather ``groupBy(dst)`` — the
-  reference's all-to-all score transpose (``PageRank.java:55-83``),
-  which no engine can elide.  The msgs→state join is likewise
-  exchange-free (groupBy leaves msgs partitioned on the join key).
+  hash-partitioned by ``src`` and the frontier comes out of the gather
+  partitioned by vertex id on the same partition count, so the scatter
+  join (SHUFFLE_HASH hint: edges stream unsorted against a
+  per-partition hash of the frontier) needs no exchange; the only
+  shuffle is the gather ``groupBy(dst)`` — the reference's all-to-all
+  score transpose (``PageRank.java:55-83``), which no engine can elide.
 - the gather is map-side combined (partial aggregation), so hub
   in-degree skew collapses before the exchange — one partial per map
   partition, not one row per edge;
-- both superstep joins carry a per-plan SHUFFLE_HASH hint: without
-  stats on checkpointed state, Catalyst's fallback is sort-merge —
-  which would re-sort the FULL edge set every superstep.  SHJ streams
-  edges unsorted against a per-partition hash map of the small side.
-  ``broadcast_frontier_rows`` (opt-in, default off) switches the
-  scatter to a broadcast join below that frontier size — it saves
-  nothing over the co-partitioned SHJ (both touch every edge
-  partition) but is kept for A/B measurement;
-- per-superstep driver work is minimized: lineage is cut with a *lazy*
-  localCheckpoint and the only materializing job is the aggregate
-  (max-delta + active count in tolerance mode, active count alone in
-  fixed mode), which is also what makes retiring the previous
-  superstep's checkpoint RDD safe.  Both modes can batch it across k
-  supersteps (``aggregate_interval`` / ``tolerance_check_interval``)
-  — one driver job amortized over k lazily-checkpointed levels;
-- durable resume + metrics via ``SuperstepCheckpointer``.
+- there is no per-superstep |V|-row state join: ranks are folded from
+  the message levels once per k-superstep batch, and that fold is the
+  batch's single driver job (the convergence/active-count aggregate);
+- with a ``SuperstepCheckpointer`` every superstep is a batch and every
+  ``checkpoint_interval``-th one is committed: the parquet write of
+  ``(id, rank, delta[, outdeg])`` is that superstep's only job, and
+  ``DataFrame.observe`` collects its metrics (max/L1 delta, active
+  vertices, gather skew) inside the write.
 """
 
 from __future__ import annotations
 
+import os as _os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-import os as _os
 
 from ..graph import Graph
 from ..plans.checkpoint import (
@@ -71,9 +63,9 @@ from ..plans.checkpoint import (
     SuperstepCheckpointer,
     aqe_suspended,
     shuffle_partitions_override,
-    skew_ratio,
     truncate_lineage,
 )
+from ..plans.rows import one_row
 
 #: per-partition hash-build budget for the superstep joins (bytes).
 #: A LongHashedRelation build that outgrows the task memory grant
@@ -100,19 +92,16 @@ class PageRankResult:
         """One-row write-mode YIELD parity — ``(nodes, iterations,
         dampingFactor, loadMillis, computeMillis, writeMillis)``
         (``PageRankProc.java`` write mode / ``results/PageRankScore.Stats``)."""
-        return self.scores.sparkSession.createDataFrame(
-            [
-                (
-                    self.scores.count(),
-                    self.iterations_ran,
-                    self.damping,
-                    self.load_millis,
-                    self.compute_millis,
-                    self.write_millis,
-                )
-            ],
+        return one_row(
+            self.scores.sparkSession,
             "nodes long, iterations long, damping_factor double, "
             "load_millis long, compute_millis long, write_millis long",
+            self.scores.count(),
+            self.iterations_ran,
+            self.damping,
+            self.load_millis,
+            self.compute_millis,
+            self.write_millis,
         )
 
 
@@ -123,11 +112,7 @@ def pagerank(
     tolerance: float | None = None,
     checkpointer: SuperstepCheckpointer | None = None,
     checkpoint_interval: int = 1,
-    broadcast_frontier_rows: int | None = None,
-    collect_skew_metric: bool = False,
     adaptive: bool = False,
-    storage: str = "edges",
-    hub_degree: int = 100_000,
     aggregate_interval: int = 4,
     weighted: bool = False,
     source_nodes: list[int] | None = None,
@@ -139,22 +124,19 @@ def pagerank(
     Beyond-reference variants (GDS-era surface, same delta-push loop):
 
     - ``weighted=True``: a node pushes ``delta · w(s,t) / W(s)`` with
-      ``W(s)`` its total outgoing weight (requires ``storage='edges'``).
+      ``W(s)`` its total outgoing weight.
     - ``source_nodes``: personalized PageRank — the (1-d) teleport mass
       starts (and implicitly restarts) only at the given sources; all
       other vertices init at 0.  Scores are the non-normalized
       source-seeded recurrence, reference-style.
 
-    ``storage`` picks the scatter-side layout:
-
-    - ``"edges"`` (default): flat ``(src, dst, outdeg)`` rows — the
-      better choice when the frontier is a tiny fraction of vertices.
-    - ``"adjacency"``: salted CSR-style adjacency blocks
-      ``(src, dsts array<long>, degree)`` — the reference's CSR
-      (``HugeGraphFactory.java:360-395``) as the north rule asks.  The
-      per-superstep join touches one row per (active) vertex instead of
-      one per edge; hubs above ``hub_degree`` are split across salted
-      rows so one row never carries an unbounded array.
+    ``checkpointer``: commit the state ``(id, rank, delta, outdeg)``
+    (``(id, rank, delta)`` when weighted) of every
+    ``checkpoint_interval``-th superstep, with one metrics row each; a
+    rerun with the same checkpointer directory resumes from the last
+    committed superstep.  Durable runs test convergence every superstep
+    (as ``tolerance_check_interval=1``), and their results are
+    bit-identical to the in-memory run of the same superstep count.
 
     ``adaptive=False`` suspends AQE for the superstep loop (restored
     after, refcounted across overlapping runs): the loop's joins are
@@ -164,15 +146,11 @@ def pagerank(
     agg).  Pass ``adaptive=True`` to leave AQE on — e.g. when the edge
     build is part of this job's plan and skewed.
 
-    ``aggregate_interval``: in fixed-iteration mode, run the
+    ``aggregate_interval``: in fixed-iteration mode, fold and run the
     materializing active-count aggregate every k supersteps instead of
     every superstep — one driver job amortized over k lazily-
-    checkpointed levels (bit-identical results; ~35% lower superstep
-    latency at k=3-4 on small inputs).  Forced to 1 in tolerance mode
-    (the convergence test needs every superstep's max-delta), with a
-    checkpointer (durable saves are per superstep batch anyway), or
-    when ``broadcast_frontier_rows`` is set (the decision needs a
-    per-superstep frontier size).
+    checkpointed levels (bit-identical results).  Not used in
+    tolerance mode or with a checkpointer.
 
     ``tolerance_check_interval``: in tolerance mode, test convergence
     (the materializing max-delta aggregate) every k supersteps instead
@@ -183,23 +161,20 @@ def pagerank(
     Periodic convergence checks are the standard trade at cluster
     scale: k-1 cheap extra supersteps against k× fewer driver
     round-trips.  Default 1 preserves exact minimal-stop semantics."""
-    with aqe_suspended(graph.spark, enabled=adaptive):
-        return _run(
-            graph,
-            damping,
-            max_iterations,
-            tolerance,
-            checkpointer,
-            checkpoint_interval,
-            broadcast_frontier_rows,
-            collect_skew_metric,
-            storage,
-            hub_degree,
-            aggregate_interval,
-            weighted,
-            source_nodes,
-            tolerance_check_interval,
-        )
+    return _run(
+        graph,
+        adaptive,
+        damping,
+        max_iterations,
+        tolerance,
+        checkpointer,
+        checkpoint_interval,
+        aggregate_interval,
+        weighted,
+        source_nodes,
+        tolerance_check_interval,
+        0.0,
+    )
 
 
 def article_rank(
@@ -207,8 +182,6 @@ def article_rank(
     damping: float = 0.85,
     max_iterations: int = 20,
     tolerance: float | None = None,
-    storage: str = "edges",
-    hub_degree: int = 100_000,
     aggregate_interval: int = 4,
     tolerance_check_interval: int = 1,
     adaptive: bool = False,
@@ -224,10 +197,9 @@ def article_rank(
 
     with ``ō = Σ outdeg / |{u: outdeg(u)>0}|`` (exact integer sum and
     count, divided once in float64 — engine and SQL oracle compute the
-    identical double).  The recurrence is linear, so the same delta-push
-    superstep loop applies unchanged — one scatter join + one gather
-    exchange per superstep, SHJ-hinted, lazily checkpointed (module
-    header).  Same result/stats surface as :func:`pagerank`."""
+    identical double).  The recurrence is linear, so the same fold
+    loop applies unchanged (module header).  Same result/stats surface
+    and checkpoint layout as :func:`pagerank`."""
     row = (
         graph.edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
@@ -235,24 +207,27 @@ def article_rank(
         .first()
     )
     offset = float(row["s"]) / float(row["n"]) if row["n"] else 0.0
-    with aqe_suspended(graph.spark, enabled=adaptive):
-        return _run(
-            graph,
-            damping,
-            max_iterations,
-            tolerance,
-            checkpointer,
-            checkpoint_interval,
-            None,
-            False,
-            storage,
-            hub_degree,
-            aggregate_interval,
-            False,
-            None,
-            tolerance_check_interval,
-            outdeg_offset=offset,
-        )
+    return _run(
+        graph,
+        adaptive,
+        damping,
+        max_iterations,
+        tolerance,
+        checkpointer,
+        checkpoint_interval,
+        aggregate_interval,
+        False,
+        None,
+        tolerance_check_interval,
+        offset,
+    )
+
+
+def _run(graph: Graph, adaptive: bool, *args) -> PageRankResult:
+    with aqe_suspended(graph.spark, enabled=adaptive), shuffle_partitions_override(
+        graph.spark
+    ) as set_np:
+        return _run_edges_fold(graph, *args, set_shuffle_partitions=set_np)
 
 
 def _run_edges_fold(
@@ -260,6 +235,8 @@ def _run_edges_fold(
     damping: float,
     max_iterations: int,
     tolerance: float | None,
+    checkpointer: SuperstepCheckpointer | None,
+    checkpoint_interval: int,
     aggregate_interval: int,
     weighted: bool,
     source_nodes: list[int] | None,
@@ -267,9 +244,8 @@ def _run_edges_fold(
     outdeg_offset: float,
     set_shuffle_partitions=None,
 ) -> PageRankResult:
-    """The hot-path superstep loop (storage='edges', no checkpointer):
-    **message-fold PageRank** — there is NO per-superstep |V|-row state
-    join or state cache write at all.
+    """The superstep loop: **message-fold PageRank** — there is NO
+    per-superstep |V|-row state join or state cache write at all.
 
     Key identity: ``delta_t(v) = d·msg_t(v)`` and ``rank(v) = init(v) +
     Σ_t d·msg_t(v)`` added in superstep order, so the gather output
@@ -277,25 +253,29 @@ def _run_edges_fold(
     directly yields the next frontier (its ``push = d·msg/outdeg``; the
     destination's out-degree rides the edge table and is gathered with
     a free ``max`` — constant per dst), and ranks are reconstructed at
-    each check boundary by ONE order-preserving fold per batch:
-    ``collect_list(struct(t, msg))`` → ``array_sort`` →
-    ``aggregate(acc + d·msg)`` seeded with the previous rank.  The fold
+    each batch boundary by ONE fold join: the batch's levels are
+    pivoted to one column per superstep (``max(when(t = k, msg))``, one
+    row per (id, t) so the max is that row's msg) and added to the
+    previous rank left to right, ``rank + d·m_1 + d·m_2 + …``.  That
     reproduces the sequential ``rank += d·msg_t`` recurrence
-    bit-for-bit (same addends, same order — absent supersteps add
-    exactly 0.0, an FP identity), so results hash-match the unrolled
-    SQL oracle and the state-join loop.
+    bit-for-bit (same addends, same order — a superstep a vertex missed
+    adds exactly 0.0, an FP identity), so results hash-match the
+    unrolled SQL oracle.
 
     Per superstep this leaves exactly: one co-partitioned scatter join
     (SHUFFLE_HASH, zero exchange), one map-side-combined gather
-    exchange, one ≤|active|-row lazy checkpoint.  Per k-superstep batch:
-    ONE driver job — the lazily-checkpointed fold (which carries the
-    batch-final msg as a ``last_msg`` column) is executed by the stats
-    aggregate, so one k·|V|-row fold exchange + one |V|-row rank cache
-    write replace the old k |V|-row joins and k |V|-row state cache
-    writes, at the old loop's one-job-per-batch dispatch cost.
-    Measured ~25% lower superstep latency on the 20M-edge north input;
-    the single-job fold keeps small latency-bound graphs at parity with
-    the state-join loop (the two-job version was 2x slower there).
+    exchange, one ≤|active|-row lazy checkpoint (only when the batch
+    has more than one level).  Per k-superstep batch: ONE driver job —
+    the lazily-checkpointed fold (which carries the batch-final msg as
+    a ``last_msg`` column) is executed by the stats aggregate.
+
+    Durable mode (``checkpointer``): every superstep is a one-level
+    batch; on a commit superstep the fold is written as the checkpoint
+    state instead — that write is the superstep's only job, its
+    metrics are observed inside it, and the next superstep reads the
+    state back from the files just written (lineage cut for free).
+    The load phase is one job, the vertex count (two on resume: the
+    checkpoint's schema read).
     """
     spark = graph.spark
     d = float(damping)
@@ -303,47 +283,48 @@ def _run_edges_fold(
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     t_load0 = time.time()
 
+    metrics: list[dict] = []
+    saved = None
+    start_iter = 0
+    if checkpointer is not None:
+        last = checkpointer.latest_iteration()
+        if last is not None:
+            saved = checkpointer.load(last, ["state"])["state"]
+            start_iter = last
+            metrics = checkpointer.metrics()
+
     # Evaluate the user's edge subtree EXACTLY ONCE: the edge DataFrame
     # is arbitrary SQL (projections, joins — at 100 TB the expensive
     # scan), and out-degree / odeg-join / vertex derivation would each
-    # re-run it.  Persist the src-partitioned base first; everything
-    # below reads the cache, and the base is released once the final
-    # decorated edge table is materialized.
+    # re-run it.  The src-partitioned base is persisted lazily — the
+    # vertex count (or, when it does not read the edges, the first
+    # batch) fills the cache — and released once the first batch has
+    # materialized the decorated edge table.
     cols = ["src", "dst", "weight"] if weighted else ["src", "dst"]
     base = graph.edges.select(*cols)
     if not graph.src_partitioned:
         base = base.repartition(n_part, "src")
     base = base.persist()
-    base.count()
 
-    out_deg = base.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    if weighted:
-        wsum = base.groupBy("src").agg(F.sum("weight").alias("wsum"))
-        edges = (
-            base.join(wsum, "src")
-            .select("src", "dst", (F.col("weight") / F.col("wsum")).alias("share"))
+    def with_outdeg(df: DataFrame, deg_src: DataFrame) -> DataFrame:
+        deg = deg_src.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).alias("outdeg")
         )
-    else:
-        # each edge row carries its DESTINATION's out-degree so the
-        # gather hands the next frontier everything it needs (msg +
-        # odeg) with zero extra joins; dangling dsts get odeg 0 and
-        # fall out of the frontier (they absorb rank, push nothing)
-        edges = (
-            base.join(
-                out_deg.select(
-                    F.col("src").alias("dst"), F.col("outdeg").alias("odeg")
-                ),
-                "dst",
-                "left",
-            )
-            .select("src", "dst", F.coalesce("odeg", F.lit(0)).alias("odeg"))
+        # co-partitioned with `df` on the id: a hash join, no broadcast job
+        return df.join(deg.hint("SHUFFLE_HASH"), "id", "left").withColumn(
+            "outdeg", F.coalesce("outdeg", F.lit(0))
         )
-    # vertex set from the cached base (graph.vertices would re-run the
-    # user subtree when no explicit vertex table was provided);
-    # materialized (eager truncation) BEFORE the loop partitioning is
-    # fixed so |V| can size it — see the build-side guard below
-    if graph._vertices is not None:  # noqa: SLF001
-        verts = graph.vertices
+
+    # vertex set (graph.vertices would re-run the user subtree when no
+    # explicit vertex table was provided), or the resumed state — its
+    # rows are the vertex set; counted BEFORE the loop partitioning is
+    # fixed so |V| can size it (build-side guard below)
+    if saved is not None:
+        verts = saved
+        if not weighted and "outdeg" not in verts.columns:
+            verts = with_outdeg(verts, base)  # checkpoint without outdeg
+    elif graph._vertices is not None:  # noqa: SLF001
+        verts = graph.vertices.select("id")
     elif graph.symmetrized:
         verts = base.select(F.col("src").alias("id")).distinct()
     else:
@@ -352,17 +333,40 @@ def _run_edges_fold(
             .union(base.select(F.col("dst").alias("id")))
             .distinct()
         )
-    verts = truncate_lineage(verts.repartition(n_part, "id"))
+    verts = verts.repartition(n_part, "id").persist()
     n_vertices = verts.count()
-    cache = SuperstepCache(spark)
-    cache.track(verts)  # retired once ranks/frontier adopt below
+
+    if weighted:
+        wsum = base.groupBy("src").agg(F.sum("weight").alias("wsum"))
+        edges = (
+            base.join(wsum.hint("SHUFFLE_HASH"), "src")  # co-partitioned
+            .select("src", "dst", (F.col("weight") / F.col("wsum")).alias("share"))
+        )
+    else:
+        # each edge row carries its DESTINATION's out-degree so the
+        # gather hands the next frontier everything it needs (msg +
+        # odeg) with zero extra joins; dangling dsts get odeg 0 and
+        # fall out of the frontier (they absorb rank, push nothing).
+        # SHUFFLE_HASH, not a broadcast: a broadcast costs its own job
+        # at bench scale and cannot hold |V| rows at cluster scale
+        out_deg = base.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+        edges = (
+            base.join(
+                out_deg.select(
+                    F.col("src").alias("dst"), F.col("outdeg").alias("odeg")
+                ).hint("SHUFFLE_HASH"),
+                "dst",
+                "left",
+            )
+            .select("src", "dst", F.coalesce("odeg", F.lit(0)).alias("odeg"))
+        )
 
     # ------------------------------------------------------------------
     # Build-side memory guard (found by the 160M-edge / 2-partition
     # criterion leg, which died with "Can't acquire 1073741824 bytes
     # memory to build hash relation"): the superstep scatter join
     # builds a per-partition hash of the FRONTIER (up to |V| rows), and
-    # the per-batch fold join builds one of the k-level message arrays
+    # the per-batch fold join builds one of the k-level message columns
     # (|V| rows × ~(8 + 24k) bytes).  Neither scales with executor
     # count — only with |V|/n_part — so partitions==cores on a narrow
     # cluster, or any 100-TB run with conservatively few partitions,
@@ -372,11 +376,11 @@ def _run_edges_fold(
     #      _SHJ_BUILD_TARGET bytes per partition (~48 B/row in
     #      LongHashedRelation) — partition sizing, the fix the brief
     #      prescribes ("size shuffle partitions so partitions fit");
-    #   2. when the fold's array build would still exceed the target,
-    #      switch THAT join to sort-merge (MERGE hint): it
-    #      sorts-and-spills instead of failing a 1 GB+ allocation —
-    #      the same degrade-gracefully shape as the dedup tier's
-    #      corpus-sized joins.
+    #   2. when the fold's build would still exceed the target, switch
+    #      THAT join to sort-merge (MERGE hint): it sorts-and-spills
+    #      instead of failing a 1 GB+ allocation — the same
+    #      degrade-gracefully shape as the dedup tier's corpus-sized
+    #      joins.
     # At bench scales (|V| ≤ 5M, 32 partitions) neither triggers, so
     # the measured north plans are unchanged.
     # ------------------------------------------------------------------
@@ -386,46 +390,61 @@ def _run_edges_fold(
         n_part = int(needed)
         if set_shuffle_partitions is not None:
             # the per-superstep groupBy exchanges read the session
-            # conf; raise it too (restore-guaranteed by the caller's
+            # conf; raise it too (restored by the caller's
             # shuffle_partitions_override) so gather output partitioning
             # keeps matching the edge table — the SHUFFLE_HASH scatter
             # join stays zero-exchange
             set_shuffle_partitions(n_part)
+    # filled by the first batch's job, which also derives the initial
+    # frontier from it; `base` and `verts` are released after that job
     edges = edges.repartition(n_part, "src").persist()
-    edges.count()
 
     def denom(col):
         return col + F.lit(outdeg_offset) if outdeg_offset else col
 
-    if source_nodes is not None:
-        srcs = spark.createDataFrame([(int(v),) for v in source_nodes], "id long")
-        seeded = srcs.withColumn("seeded", F.lit(True))
-        ranks = verts.join(seeded, "id", "left").select(
-            "id",
-            F.when(F.col("seeded"), F.lit(alpha)).otherwise(F.lit(0.0)).alias("rank"),
+    def push_frontier(df: DataFrame, delta, odeg: str) -> DataFrame:
+        """Next scatter input from a state-like frame: ``(src, delta)``
+        weighted, ``(src, push = delta/outdeg)`` otherwise; vertices
+        that received nothing (or have no out-edges) push nothing."""
+        if weighted:
+            return df.filter(delta != 0.0).select(
+                F.col("id").alias("src"), delta.alias("delta")
+            )
+        return df.filter((delta != 0.0) & (F.col(odeg) > 0)).select(
+            F.col("id").alias("src"), (delta / denom(F.col(odeg))).alias("push")
         )
-        starts = srcs
+
+    # state carried between batches: (id, rank), plus the out-degree in
+    # durable mode so a committed superstep writes the checkpoint layout
+    keep = [] if weighted or checkpointer is None else ["outdeg"]
+    if saved is not None:
+        ranks = verts.select("id", "rank", *keep)
+        frontier = push_frontier(verts, F.col("delta"), "outdeg")
     else:
-        ranks = verts.select("id", F.lit(alpha).alias("rank"))
-        starts = verts.select("id")
-    ranks = truncate_lineage(ranks.repartition(n_part, "id"))
-    if weighted:
-        frontier = starts.select(F.col("id").alias("src"), F.lit(alpha).alias("delta"))
-    else:
-        # inner join: vertices without out-edges push nothing
-        frontier = starts.join(out_deg.withColumnRenamed("src", "id"), "id").select(
-            F.col("id").alias("src"),
-            (F.lit(alpha) / denom(F.col("outdeg"))).alias("push"),
-        )
-    frontier = truncate_lineage(frontier)
-    base.unpersist()  # every downstream read now hits `edges`/the inits
-    cache.track(ranks, frontier)
+        if source_nodes is not None:
+            srcs = spark.createDataFrame([(int(v),) for v in source_nodes], "id long")
+            seeded = verts.join(srcs.withColumn("seeded", F.lit(True)), "id", "left")
+            init = F.when(F.col("seeded"), F.lit(alpha)).otherwise(F.lit(0.0))
+        else:
+            seeded, init = verts, F.lit(alpha)
+        # out-degrees from the persisted edge table (src-partitioned:
+        # no exchange); every vertex starting with delta = init pushes
+        state0 = seeded.select("id", init.alias("rank"))
+        if not weighted:
+            state0 = with_outdeg(state0, edges)
+        ranks = state0.select("id", "rank", *keep)
+        frontier = push_frontier(state0, F.col("rank"), "outdeg")
+    cache = SuperstepCache(spark)
     load_millis = int(1000 * (time.time() - t_load0))
     t_compute0 = time.time()
 
-    interval = max(
-        1, int(tolerance_check_interval if tolerance is not None else aggregate_interval)
-    )
+    if checkpointer is not None:
+        interval = 1
+    else:
+        interval = max(
+            1,
+            int(tolerance_check_interval if tolerance is not None else aggregate_interval),
+        )
     # fold-join strategy by estimated per-partition build bytes (guard
     # mechanism 2 above); at bench scale this stays SHUFFLE_HASH
     fold_hint = (
@@ -433,16 +452,16 @@ def _run_edges_fold(
         if n_vertices * (8 + 24 * interval) // n_part > shj_target
         else "SHUFFLE_HASH"
     )
-    metrics: list[dict] = []
+    # durable mode counts messages per destination for the skew metric
+    durable_aggs = [] if checkpointer is None else [F.count(F.lit(1)).alias("n_in")]
     batch: list[tuple[int, DataFrame]] = []
     converged = False
-    it = 0
-    msgs = None
+    it = start_iter
     while it < max_iterations:
         it += 1
         t0 = time.time()
         contrib = F.col("delta") * F.col("share") if weighted else F.col("push")
-        aggs = [F.sum(contrib).alias("msg")]
+        aggs = [F.sum(contrib).alias("msg"), *durable_aggs]
         if not weighted:
             aggs.append(F.max("odeg").alias("odeg"))
         msgs = (
@@ -450,70 +469,68 @@ def _run_edges_fold(
             .groupBy(F.col("dst").alias("id"))
             .agg(*aggs)
         )
-        msgs = truncate_lineage(msgs, eager=False)
+        if interval > 1:
+            # later levels of the batch chain on this one, and the fold
+            # reads it again: cache it as the batch job computes it
+            msgs = truncate_lineage(msgs, eager=False)
         batch.append((it, msgs))
-        if weighted:
-            frontier = msgs.filter(F.col("msg") != 0.0).select(
-                F.col("id").alias("src"), (F.lit(d) * F.col("msg")).alias("delta")
-            )
-        else:
-            frontier = msgs.filter(
-                (F.col("msg") != 0.0) & (F.col("odeg") > 0)
-            ).select(
-                F.col("id").alias("src"),
-                ((F.lit(d) * F.col("msg")) / denom(F.col("odeg"))).alias("push"),
-            )
         iter_metrics: dict = {"algorithm": "pagerank"}
-        if it % interval == 0 or it >= max_iterations:
-            # fold the batch into ranks, in superstep order (bit-exact),
-            # carrying the batch-FINAL level's msg as a column so ONE
-            # lazily-checkpointed aggregate both materializes the whole
-            # batch (each msgs level caches as it computes) and yields
-            # the convergence stats — one driver job per batch, not the
-            # former stats-job + eager-fold pair (2x on latency-bound
-            # small graphs where the job dispatch is the whole cost)
-            tagged = None
-            lvl_cols = ["msg"] if weighted else ["msg", "odeg"]
-            for t, m in batch:
-                part = m.select("id", F.lit(t).alias("t"), *lvl_cols)
-                tagged = part if tagged is None else tagged.unionByName(part)
-            arr_aggs = [F.collect_list(F.struct("t", "msg")).alias("am")]
-            if not weighted:
-                # odeg is constant per vertex; max over the levels that
-                # carried it reproduces it for the frontier rebuild
-                arr_aggs.append(F.max("odeg").alias("odeg"))
-            arr = tagged.groupBy("id").agg(*arr_aggs)
-            folded = ranks.join(arr.hint(fold_hint), "id", "left").select(
-                "id",
-                F.when(F.col("am").isNull(), F.col("rank"))
-                .otherwise(
-                    F.aggregate(
-                        F.array_sort("am"),
-                        F.col("rank"),
-                        lambda acc, x: acc + F.lit(d) * x["msg"],
-                    )
-                )
-                .alias("rank"),
-                # the level-`it` msg, null when this vertex received
-                # nothing in the batch-final superstep (F.get: null on
-                # empty/missing — ANSI-safe, unlike element_at)
-                F.get(
-                    F.filter("am", lambda x: x["t"] == F.lit(it)), 0
-                )["msg"].alias("last_msg"),
-                *([] if weighted else [F.col("odeg")]),
+        metrics.append(iter_metrics)
+        if not (it % interval == 0 or it >= max_iterations):
+            frontier = push_frontier(msgs, F.lit(d) * F.col("msg"), "odeg")
+            iter_metrics["wall_ms"] = int(1000 * (time.time() - t0))
+            continue
+
+        folded = _fold(ranks, batch, d, fold_hint, keep, weighted, bool(durable_aggs))
+        levels, batch = [m for _, m in batch], []
+        last = F.col("last_msg")
+        if checkpointer is not None and it % checkpoint_interval == 0:
+            delta = F.lit(d) * F.coalesce(last, F.lit(0.0))
+            state_cols = ["id", "rank", "delta", *keep]
+            obs = Observation()
+            observed = folded.select(
+                "id", "rank", delta.alias("delta"), *keep, "n_in"
+            ).observe(
+                obs,
+                F.max(F.abs("delta")).alias("max_delta"),
+                F.sum(F.abs("delta")).alias("l1_delta"),
+                F.sum(F.when(F.col("delta") != 0.0, 1).otherwise(0)).alias("active"),
+                F.max("n_in").alias("in_max"),
+                F.avg("n_in").alias("in_avg"),
             )
+
+            def observed_metrics(m=iter_metrics, obs=obs, t0=t0) -> dict:
+                row = obs.get
+                m.update(
+                    max_delta=float(row["max_delta"] or 0.0),
+                    l1_delta=float(row["l1_delta"] or 0.0),
+                    active_vertices=int(row["active"] or 0),
+                    # max/mean messages per destination (1.0 when none)
+                    skew_ratio=float(row["in_max"]) / float(row["in_avg"])
+                    if row["in_avg"]
+                    else 1.0,
+                    wall_ms=int(1000 * (time.time() - t0)),
+                )
+                return m
+
+            state = checkpointer.save(
+                it, {"state": observed.select(*state_cols)}, observed_metrics
+            )["state"]
+            ranks = state.select("id", "rank", *keep)
+            frontier = push_frontier(state, F.col("delta"), "outdeg")
+            cache.track()  # the state now lives in the committed files
+        else:
             folded = truncate_lineage(folded, eager=False)
             stats = folded.agg(
-                F.max(F.abs(F.lit(d) * F.col("last_msg"))).alias("max_delta"),
-                F.sum(
-                    F.when(F.col("last_msg") != 0.0, 1).otherwise(0)
-                ).alias("active"),
+                F.max(F.abs(F.lit(d) * last)).alias("max_delta"),
+                F.sum(F.when(last != 0.0, 1).otherwise(0)).alias("active"),
             ).first()
             iter_metrics.update(
                 max_delta=float(stats["max_delta"] or 0.0),
                 active_vertices=int(stats["active"] or 0),
+                wall_ms=int(1000 * (time.time() - t0)),
             )
-            ranks = folded.select("id", "rank")
+            ranks = folded.select("id", "rank", *keep)
             # Rebuild the frontier from the TRUNCATED folded state, not
             # from the batch's last msgs level: RDD.doCheckpoint only
             # truncates the first checkpoint-marked RDD it reaches from
@@ -524,39 +541,23 @@ def _run_edges_fold(
             # (StackOverflowError past ~100 supersteps).  Same rows,
             # same expression, so results are unchanged: last_msg IS
             # the batch-final msg and odeg rides the fold.
-            if weighted:
-                frontier = folded.filter(F.col("last_msg") != 0.0).select(
-                    F.col("id").alias("src"),
-                    (F.lit(d) * F.col("last_msg")).alias("delta"),
-                )
-            else:
-                frontier = folded.filter(
-                    (F.col("last_msg") != 0.0) & (F.col("odeg") > 0)
-                ).select(
-                    F.col("id").alias("src"),
-                    ((F.lit(d) * F.col("last_msg")) / denom(F.col("odeg"))).alias(
-                        "push"
-                    ),
-                )
-            # adopt everything (retiring the previous batch), then
-            # immediately retire this batch's folded intermediates —
-            # the next superstep reads only `folded`
-            cache.track(folded, *(m for _, m in batch))
+            frontier = push_frontier(folded, F.lit(d) * last, "odeg")
+            # the batch is materialized: adopt it (retiring the previous
+            # batch), then retire this batch's msgs levels — the next
+            # superstep reads only `folded`
+            cache.track(folded, *levels)
             cache.track(folded)
-            batch = []
-            iter_metrics["wall_ms"] = int(1000 * (time.time() - t0))
-            metrics.append(iter_metrics)
-            if tolerance is not None and iter_metrics["max_delta"] < tolerance:
-                converged = True
-                break
-            if iter_metrics["active_vertices"] == 0:
-                converged = True
-                break
-        else:
-            iter_metrics["wall_ms"] = int(1000 * (time.time() - t0))
-            metrics.append(iter_metrics)
+        base.unpersist()  # no-ops after the first batch
+        verts.unpersist()
+        if tolerance is not None and iter_metrics["max_delta"] < tolerance:
+            converged = True
+            break
+        if iter_metrics["active_vertices"] == 0:
+            converged = True
+            break
 
     edges.unpersist()
+    base.unpersist()
     scores = ranks.select("id", F.col("rank").alias("score"))
     return PageRankResult(
         scores=scores,
@@ -569,288 +570,51 @@ def _run_edges_fold(
     )
 
 
-def _run(
-    graph: Graph,
-    damping: float,
-    max_iterations: int,
-    tolerance: float | None,
-    checkpointer: SuperstepCheckpointer | None,
-    checkpoint_interval: int,
-    broadcast_frontier_rows: int,
-    collect_skew_metric: bool,
-    storage: str,
-    hub_degree: int,
-    aggregate_interval: int = 4,
-    weighted: bool = False,
-    source_nodes: list[int] | None = None,
-    tolerance_check_interval: int = 1,
-    outdeg_offset: float = 0.0,
-) -> PageRankResult:
-    if weighted and storage != "edges":
-        raise ValueError("weighted PageRank requires storage='edges'")
-    if (
-        storage == "edges"
-        and checkpointer is None
-        and broadcast_frontier_rows is None
-        and not collect_skew_metric
-    ):
-        # hot path: message-fold loop (no per-superstep state join);
-        # bit-identical results, ~25% lower superstep latency.  The
-        # state-join loop below remains for durable checkpoint/resume
-        # (needs per-superstep (rank, delta) rows), the broadcast
-        # A/B knob, the skew metric, and adjacency storage.
-        with shuffle_partitions_override(graph.spark) as set_np:
-            return _run_edges_fold(
-                graph,
-                damping,
-                max_iterations,
-                tolerance,
-                aggregate_interval,
-                weighted,
-                source_nodes,
-                tolerance_check_interval,
-                outdeg_offset,
-                set_shuffle_partitions=set_np,
-            )
-    spark = graph.spark
-    t_load0 = time.time()
-    d = float(damping)
-    alpha = 1.0 - d
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-
-    # Scatter-side layout — weight is ignored in the reference modes
-    # (PageRank loads withoutRelationshipWeights, PageRankProc.java:147);
-    # weighted=True pushes delta*w/W(s) instead of delta/outdeg.
-    if storage == "adjacency":
-        edges = (
-            graph.adjacency(hub_degree=hub_degree, sort_neighbors=False)
-            .select("src", "dsts", "degree")
-            .repartition(n_part, "src")
-            .persist()
+def _fold(
+    ranks: DataFrame,
+    batch: list[tuple[int, DataFrame]],
+    d: float,
+    hint: str,
+    keep: list[str],
+    weighted: bool,
+    count_in: bool,
+) -> DataFrame:
+    """``ranks`` advanced over the batch's message levels:
+    ``(id, rank, last_msg, *keep, [odeg], [n_in])``.  ``last_msg`` and
+    ``n_in`` are the batch-final level's, null where that level sent
+    the vertex nothing; ``odeg`` (unweighted) is the vertex's
+    out-degree wherever it received a message in the batch."""
+    final = batch[-1][0]
+    tagged = None
+    for t, m in batch:
+        part = m.select(
+            "id",
+            F.lit(t).alias("t"),
+            "msg",
+            *([] if weighted else ["odeg"]),
+            *(["n_in"] if count_in else []),
         )
-    elif storage == "edges":
-        if weighted:
-            wsum = graph.edges.groupBy("src").agg(F.sum("weight").alias("wsum"))
-            edges = (
-                graph.edges.select("src", "dst", "weight")
-                .join(wsum, "src")
-                .select("src", "dst", (F.col("weight") / F.col("wsum")).alias("share"))
-            )
-        else:
-            # unweighted: the edge table is just (src, dst) — outdeg
-            # lives in the STATE (one column), so the per-superstep
-            # push delta/outdeg is computed ONCE PER FRONTIER VERTEX
-            # instead of once per edge, and the persisted scatter side
-            # is a third smaller.  Bit-stable vs the unrolled SQL
-            # oracle: the per-edge contribution is the identical
-            # double (same operands — division, not a reciprocal),
-            # only computed |V| instead of |E| times.
-            edges = graph.edges.select("src", "dst")
-        if graph.src_partitioned:
-            # bucketed edge table (sources/graph_store.py): the scan is
-            # already HashPartitioning(src, n) — the degree groupBy and
-            # join plan with zero edge-side Exchange, and the persisted
-            # layout co-partitions the superstep scatter join exactly
-            # like the explicit repartition would.
-            edges = edges.persist()
-        else:
-            edges = edges.repartition(n_part, "src").persist()
-    else:
-        raise ValueError(f"storage must be 'adjacency' or 'edges', got {storage!r}")
-    edges.count()  # materialize once; reused every superstep
+        tagged = part if tagged is None else tagged.unionByName(part)
 
-    metrics: list[dict] = []
-    start_iter = 0
-    state = None
-    if checkpointer is not None:
-        last = checkpointer.latest_iteration()
-        if last is not None:
-            state = checkpointer.load(last, ["state"])["state"]
-            start_iter = last
-            metrics = checkpointer.metrics()
+    def at(t: int, col: str):
+        return F.max(F.when(F.col("t") == t, F.col(col)))
 
-    # unweighted edge storage: outdeg lives in the state (one int
-    # column carried through the update join) so the push delta/outdeg
-    # is computed once per frontier VERTEX, not once per edge, and the
-    # persisted scatter side stays a 2-column (src, dst) table
-    deg_in_state = storage == "edges" and not weighted
-    if state is None:
-        if source_nodes is not None:
-            srcs = spark.createDataFrame(
-                [(int(v),) for v in source_nodes], "id long"
-            )
-            state = graph.vertices.join(
-                srcs.withColumn("seeded", F.lit(True)), "id", "left"
-            ).select(
-                "id",
-                F.when(F.col("seeded"), F.lit(alpha)).otherwise(F.lit(0.0)).alias("rank"),
-                F.when(F.col("seeded"), F.lit(alpha)).otherwise(F.lit(0.0)).alias("delta"),
-            )
-        else:
-            state = graph.vertices.select(
-                F.col("id"),
-                F.lit(alpha).alias("rank"),
-                F.lit(alpha).alias("delta"),
-            )
-    if deg_in_state and "outdeg" not in state.columns:
-        # fresh init, or resumed from a pre-outdeg checkpoint: attach
-        # the out-degree column (same expression either way)
-        out_deg = graph.edges.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("outdeg")
-        )
-        state = state.join(out_deg, "id", "left").select(
-            "id", "rank", "delta", F.coalesce("outdeg", F.lit(0)).alias("outdeg")
-        )
-    cache = SuperstepCache(spark)
-    state = truncate_lineage(state.repartition(n_part, "id"))  # eager
-    cache.track(state)
-    load_millis = int(1000 * (time.time() - t_load0))
-    t_compute0 = time.time()
-
-    converged = False
-    it = start_iter
-    active_rows = None  # unknown until first aggregate
-    agg_interval = max(1, int(aggregate_interval))
-    tol_interval = max(1, int(tolerance_check_interval))
-    if checkpointer is not None or broadcast_frontier_rows is not None:
-        agg_interval = tol_interval = 1
-    if tolerance is not None:
-        # tolerance mode batches by the convergence-check cadence; the
-        # fixed-mode active-count batching knob does not apply
-        agg_interval = 1
-    pending: list[DataFrame] = []
-    while it < max_iterations:
-        it += 1
-        t0 = time.time()
-        if deg_in_state:
-            denom = (
-                F.col("outdeg") + F.lit(outdeg_offset)
-                if outdeg_offset
-                else F.col("outdeg")
-            )
-            frontier = (
-                state.filter((F.col("delta") != 0.0) & (F.col("outdeg") > 0))
-                .select(
-                    F.col("id").alias("src"),
-                    (F.col("delta") / denom).alias("push"),
-                )
-            )
-        else:
-            frontier = state.filter(F.col("delta") != 0.0).select(
-                F.col("id").alias("src"), F.col("delta")
-            )
-        if (
-            broadcast_frontier_rows is not None
-            and active_rows is not None
-            and active_rows <= broadcast_frontier_rows
-        ):
-            frontier = F.broadcast(frontier)
-        else:
-            # SHUFFLE_HASH, not the stats-blind SMJ default: edges
-            # stream UNSORTED against a per-partition frontier hash map
-            # — an SMJ here re-sorts the full edge set every superstep.
-            # Per-plan hint, so no session-conf races (ADVICE r1).
-            frontier = frontier.hint("SHUFFLE_HASH")
-        if storage == "adjacency":
-            denom = (
-                F.col("degree") + F.lit(outdeg_offset)
-                if outdeg_offset
-                else F.col("degree")
-            )
-            msgs = (
-                edges.join(frontier, "src")
-                .select(
-                    F.explode("dsts").alias("dst"),
-                    (F.col("delta") / denom).alias("contrib"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("contrib").alias("msg"))
-            )
-        else:
-            contrib = F.col("delta") * F.col("share") if weighted else F.col("push")
-            msgs = (
-                edges.join(frontier, "src")
-                .groupBy("dst")
-                .agg(F.sum(contrib).alias("msg"))
-            )
-        msgs = msgs.hint("SHUFFLE_HASH")  # build msgs, stream state — no sorts
-        keep = [state["outdeg"]] if deg_in_state else []
-        new_state = (
-            state.join(msgs, state["id"] == msgs["dst"], "left")
-            .select(
-                state["id"],
-                (state["rank"] + F.lit(d) * F.coalesce(msgs["msg"], F.lit(0.0))).alias("rank"),
-                (F.lit(d) * F.coalesce(msgs["msg"], F.lit(0.0))).alias("delta"),
-                *keep,
-            )
-        )
-        iter_metrics: dict = {"algorithm": "pagerank"}
-        if checkpointer is not None and it % checkpoint_interval == 0:
-            stats = new_state.agg(
-                F.max(F.abs(F.col("delta"))).alias("max_delta"),
-                F.sum(F.abs(F.col("delta"))).alias("l1_delta"),
-                F.sum(F.when(F.col("delta") != 0.0, 1).otherwise(0)).alias("active"),
-            ).first()
-            iter_metrics.update(
-                max_delta=float(stats["max_delta"] or 0.0),
-                l1_delta=float(stats["l1_delta"] or 0.0),
-                active_vertices=int(stats["active"] or 0),
-                wall_ms=int(1000 * (time.time() - t0)),
-            )
-            if collect_skew_metric:
-                flat = edges.join(frontier.select("src"), "src")
-                if storage == "adjacency":
-                    flat = flat.select(F.explode("dsts").alias("dst"))
-                iter_metrics["skew_ratio"] = skew_ratio(flat, "dst")
-            new_state = checkpointer.save(it, {"state": new_state}, iter_metrics)["state"]
-        else:
-            # lazy lineage cut; in fixed-iteration mode the materializing
-            # aggregate runs every ``agg_interval`` supersteps — one
-            # driver job amortized over the batch (each batched
-            # superstep's lazy checkpoint still caches during that job,
-            # so per-level state is resident and retirement stays safe;
-            # results are bit-identical, measured ~35% faster at k=3).
-            new_state = truncate_lineage(new_state, eager=False)
-            pending.append(new_state)
-            if tolerance is not None:
-                if it % tol_interval == 0 or it >= max_iterations:
-                    stats = new_state.agg(
-                        F.max(F.abs(F.col("delta"))).alias("max_delta"),
-                        F.sum(F.when(F.col("delta") != 0.0, 1).otherwise(0)).alias("active"),
-                    ).first()
-                    iter_metrics.update(
-                        max_delta=float(stats["max_delta"] or 0.0),
-                        active_vertices=int(stats["active"] or 0),
-                    )
-            elif it % agg_interval == 0 or it >= max_iterations:
-                row = new_state.agg(
-                    F.sum(F.when(F.col("delta") != 0.0, 1).otherwise(0)).alias("active")
-                ).first()
-                iter_metrics["active_vertices"] = int(row["active"] or 0)
-            iter_metrics["wall_ms"] = int(1000 * (time.time() - t0))
-        if "active_vertices" in iter_metrics or checkpointer is not None:
-            # the batch is materialized: adopt every level of it, retire
-            # the previous batch's checkpoints
-            cache.track(*(pending or [new_state]))
-            pending = []
-        metrics.append(iter_metrics)
-        active_rows = iter_metrics.get("active_vertices", active_rows)
-        state = new_state
-        if tolerance is not None and iter_metrics.get("max_delta", tolerance) < tolerance:
-            converged = True
-            break
-        if active_rows == 0:
-            converged = True
-            break
-
-    edges.unpersist()
-    scores = state.select(F.col("id"), F.col("rank").alias("score"))
-    return PageRankResult(
-        scores=scores,
-        iterations_ran=it,
-        converged=converged,
-        metrics=metrics,
-        damping=d,
-        load_millis=load_millis,
-        compute_millis=int(1000 * (time.time() - t_compute0)),
+    aggs = [at(t, "msg").alias(f"m{t}") for t, _ in batch]
+    if count_in:
+        aggs.append(at(final, "n_in").alias("n_in"))
+    if not weighted:
+        # odeg is constant per vertex; max over the levels that carried
+        # it reproduces it for the frontier rebuild
+        aggs.append(F.max("odeg").alias("odeg"))
+    levels = tagged.groupBy("id").agg(*aggs)
+    rank = F.col("rank")
+    for t, _ in batch:
+        rank = rank + F.lit(d) * F.coalesce(F.col(f"m{t}"), F.lit(0.0))
+    return ranks.join(levels.hint(hint), "id", "left").select(
+        "id",
+        rank.alias("rank"),
+        F.col(f"m{final}").alias("last_msg"),
+        *keep,
+        *([] if weighted else ["odeg"]),
+        *(["n_in"] if count_in else []),
     )

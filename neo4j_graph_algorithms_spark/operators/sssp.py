@@ -27,6 +27,7 @@ SSSP); unreachable vertices get infinity, as in the reference
 
 from __future__ import annotations
 
+import math
 import time
 from dataclasses import dataclass, field
 
@@ -315,6 +316,10 @@ def all_shortest_paths_weighted(
     appended (``iteration``, ``relaxed_rows`` = frontier rows actually
     scattered this round, ``improved``) — the observable the delta A/B
     (tools/apsp_delta_ab.py) compares across disciplines."""
+    if delta is not None and not (math.isfinite(delta) and delta > 0):
+        # 0 would relax nothing but the self pairs, a negative width
+        # spins empty supersteps, inf/nan break the bucket arithmetic
+        raise ValueError(f"delta must be a positive finite number, got {delta!r}")
     spark = graph.spark
     inf = float("inf")
     edges = graph.edges.select("src", "dst", "weight").persist()
@@ -345,6 +350,10 @@ def all_shortest_paths_weighted(
                 ((F.floor(F.min("distance") / delta) + 1) * delta).alias("bend")
             )
             bounded = f.join(bounds.hint("SHUFFLE_HASH"), "source")
+            if metrics is not None:
+                # the relaxed-row count and the relax join both read the
+                # split: evaluate it once
+                bounded = truncate_lineage(bounded)
             deferred = bounded.filter(F.col("distance") >= F.col("bend")).select(
                 "source", "id", "distance"
             )
@@ -399,7 +408,7 @@ def all_shortest_paths_weighted(
                 .agg(F.min("distance").alias("distance"))
             )
             frontier = truncate_lineage(frontier)  # eager
-            cache.track(joined, frontier)
+            cache.track(joined, frontier, bounded)  # retires next round
             if improved == 0 and frontier.isEmpty():
                 break
         else:

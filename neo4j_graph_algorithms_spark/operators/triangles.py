@@ -38,6 +38,7 @@ from ..plans.checkpoint import (
     shuffle_partitions_override,
     truncate_lineage,
 )
+from ..plans.rows import one_row
 
 #: per-partition budget for the pipeline's |E|-row SHUFFLE_HASH build
 #: sides (the wedge edge-existence map and the closing-edge set, ~48
@@ -212,12 +213,16 @@ def triangle_stream(graph: Graph) -> DataFrame:
 
     The oriented edge set is materialized once (eager lineage cut) so
     the three self-join branches read a cached copy instead of
-    recomputing the degree-orientation join per branch."""
+    recomputing the degree-orientation join per branch.  The triangle
+    set is returned materialized, computed under the size guards of
+    ``_oriented_edges`` (which the caller's session no longer has)."""
     from contextlib import ExitStack
 
     with ExitStack() as stack:
         oriented, _, _ = _oriented_edges(graph, stack)
-        return _wedge_triangles(truncate_lineage(oriented))
+        # materialized while the scale guards are still in force: a lazy
+        # result would run after the stack restored AQE and partitions
+        return truncate_lineage(_wedge_triangles(truncate_lineage(oriented)))
 
 
 def triangle_count(graph: Graph, with_summary: bool = True) -> TriangleCountResult:
@@ -326,9 +331,12 @@ def transitivity(graph: Graph) -> DataFrame:
         oe.unpersist()
     wedges = int(row["w"] or 0) // 2
     t = (3.0 * n_tri / wedges) if wedges else 0.0
-    return graph.spark.createDataFrame(
-        [(int(n_tri), wedges, t)],
+    return one_row(
+        graph.spark,
         "triangles long, wedges long, transitivity double",
+        int(n_tri),
+        wedges,
+        t,
     )
 
 
@@ -406,7 +414,10 @@ def doulion_estimate(
     n_edges = sampled.count()
     n_tri = triangle_stream(Graph.from_edges(sampled)).count()
     est = n_tri / (p ** 3)
-    return graph.spark.createDataFrame(
-        [(int(n_edges), int(n_tri), round(est, 6))],
+    return one_row(
+        graph.spark,
         "sampled_edges long, sampled_triangles long, est_triangles double",
+        int(n_edges),
+        int(n_tri),
+        round(est, 6),
     )

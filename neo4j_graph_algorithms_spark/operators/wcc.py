@@ -40,6 +40,7 @@ from ..plans.checkpoint import (
     aqe_suspended,
     truncate_lineage,
 )
+from ..plans.rows import one_row
 
 
 @dataclass
@@ -67,19 +68,16 @@ class WccResult:
             if self.set_count is not None
             else self.components.select("set_id").distinct().count()
         )
-        return self.components.sparkSession.createDataFrame(
-            [
-                (
-                    nodes,
-                    set_count,
-                    self.iterations_ran,
-                    self.load_millis,
-                    self.compute_millis,
-                    self.write_millis,
-                )
-            ],
+        return one_row(
+            self.components.sparkSession,
             "nodes long, set_count long, iterations long, "
             "load_millis long, compute_millis long, write_millis long",
+            nodes,
+            set_count,
+            self.iterations_ran,
+            self.load_millis,
+            self.compute_millis,
+            self.write_millis,
         )
 
 

@@ -28,6 +28,7 @@ import shutil
 import threading
 import time
 from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -226,9 +227,14 @@ class SuperstepCheckpointer:
         self,
         iteration: int,
         state: dict[str, DataFrame],
-        metrics: dict | None = None,
+        metrics: dict | Callable[[], dict] | None = None,
     ) -> dict[str, DataFrame]:
-        """Persist state DataFrames; returns them re-read (lineage cut).
+        """Persist state DataFrames; returns them re-read (lineage cut)
+        with the schema just written, so the re-read runs no job.
+
+        ``metrics`` is the superstep's metrics row, or a callable that
+        returns it, called after the writes — e.g. to read values that
+        ``DataFrame.observe`` collected while writing.
 
         Data is written first, the commit marker last, so a crash
         mid-write leaves an uncommitted (ignored) iteration.
@@ -236,9 +242,11 @@ class SuperstepCheckpointer:
         d = self._iter_dir(iteration)
         t0 = time.time()
         part_stats: dict[str, dict] = {}
+        schemas = {}
         for name, df in state.items():
             path = os.path.join(d, name)
             df.write.mode("overwrite").parquet(path)
+            schemas[name] = df.schema
             # per-partition lineage record: one parquet part per task
             # partition — sizes expose write skew without re-reading
             sizes = sorted(
@@ -255,9 +263,12 @@ class SuperstepCheckpointer:
                         sizes[-1] / (sum(sizes) / len(sizes)), 3
                     ),
                 }
+        write_ms = int(1000 * (time.time() - t0))
+        if callable(metrics):
+            metrics = metrics()
         row = {
             "iteration": iteration,
-            "write_ms": int(1000 * (time.time() - t0)),
+            "write_ms": write_ms,
             "partition_stats": part_stats,
             **(metrics or {}),
         }
@@ -266,7 +277,10 @@ class SuperstepCheckpointer:
         with open(self._commit_marker(iteration), "w") as fh:
             fh.write("ok")
         self._gc(iteration)
-        return self.load(iteration, list(state))
+        return {
+            n: self.spark.read.schema(s).parquet(os.path.join(d, n))
+            for n, s in schemas.items()
+        }
 
     def load(self, iteration: int, names: list[str]) -> dict[str, DataFrame]:
         d = self._iter_dir(iteration)
@@ -290,17 +304,3 @@ class SuperstepCheckpointer:
             ):
                 shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
 
-
-def skew_ratio(df: DataFrame, key: str = "dst") -> float:
-    """max/mean key-group size — the per-superstep skew metric."""
-    from pyspark.sql import functions as F
-
-    row = (
-        df.groupBy(key)
-        .count()
-        .agg(F.max("count").alias("mx"), F.avg("count").alias("av"))
-        .first()
-    )
-    if row is None or not row["av"]:
-        return 1.0
-    return float(row["mx"]) / float(row["av"])

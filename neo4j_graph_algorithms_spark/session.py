@@ -2,8 +2,8 @@
 
 Local-mode defaults mirror what we would submit on a real cluster via
 ``spark-submit --py-files`` (see README): AQE on (runtime skew-join
-splitting + partition coalescing), Arrow on (the extract path uses
-pandas UDFs), shuffle partitions sized to cores rather than the 200
+splitting + partition coalescing), Arrow on (``toPandas`` and the
+multimodal ``mapInPandas`` decode), shuffle partitions sized to cores rather than the 200
 default, UTC timezone so results compare bit-for-bit against the
 DuckDB oracle.
 """

@@ -2,13 +2,18 @@
 clause" at 10^12-file scale (replaces the reference's GraphLoader +
 Neo4j kernel scan, ``core/.../GraphLoader.java:203-296``).
 
-- ``with_sha256``: vectorized Arrow/pandas UDF adding
-  ``content_sha256``; the per-row invariant (BASELINE.json
-  ``input_hint``: "content sha256 equality") is checkable at any point
-  of the pipeline because every transform carries the column through.
-- ``extract_imports``: per-language regex import extraction as a
-  pandas UDF (pandas ``str.findall`` over Arrow batches — no per-row
-  Python function calls).
+- ``with_sha256``: adds ``content_sha256`` as the built-in
+  ``sha2(coalesce(content, ''), 256)``; the per-row invariant
+  (BASELINE.json ``input_hint``: "content sha256 equality") is
+  checkable at any point of the pipeline because every transform
+  carries the column through.
+- ``extract_imports``: per-language regex import extraction as
+  generated column code — one ``CASE lang`` over
+  ``regexp_extract_all`` — so the plan is whole-stage JVM code with no
+  Python worker.  The Java patterns reproduce Python ``re`` matching
+  exactly: ``(?d)`` makes ``\\n`` the only line terminator ``^`` sees,
+  and ``\\s``/``\\w`` are spelled as explicit code-point classes
+  generated from Python's own ``re`` (``_unicode_class``).
 - ``repo_edges`` / ``path_edges``: resolve imported module names
   against the module→provider mapping derived from file paths, yielding
   the weighted repo→repo (or file→file) edge DataFrame the algorithms
@@ -18,56 +23,98 @@ Neo4j kernel scan, ``core/.../GraphLoader.java:203-296``).
 
 from __future__ import annotations
 
-import hashlib
+import functools
 import re
+import sys
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..graph import Graph
 
-# one compiled regex per language; applied vectorized per Arrow batch
-_IMPORT_PATTERNS = {
-    "python": re.compile(r"^\s*(?:from|import)\s+([A-Za-z_][\w\.]*)", re.M),
-    "java": re.compile(r"^\s*import\s+(?:static\s+)?([A-Za-z_][\w\.]*)\s*;", re.M),
-    "javascript": re.compile(
-        r"""(?:require\(\s*['"]([^'"]+)['"]\s*\)|from\s+['"]([^'"]+)['"])"""
+# Java patterns per language, as templates over the Python-``re``
+# classes: ``{s}`` is a whole ``\s`` class, ``{w}`` the body of a class
+# containing ``\w`` (kept last in its class: see ``_unicode_class``).
+# The Python originals, for reference:
+#   python      ^\s*(?:from|import)\s+([A-Za-z_][\w\.]*)          (re.M)
+#   java        ^\s*import\s+(?:static\s+)?([A-Za-z_][\w\.]*)\s*;   (re.M)
+#   javascript  (?:require\(\s*['"]([^'"]+)['"]\s*\)|from\s+['"]([^'"]+)['"])
+#   go          ^\s*(?:import\s+)?"([\w\./-]+)"                      (re.M)
+# JavaScript folds its two groups into one: the ``require`` branch
+# checks its closing ``\s*)`` with a lookahead instead of consuming it
+# (no import can start inside that whitespace-and-paren tail, so the
+# next search finds the same matches).
+_IMPORT_TEMPLATES = {
+    "python": r"(?dm)^{s}*(?:from|import){s}+([A-Za-z_][.{w}]*)",
+    "java": r"(?dm)^{s}*import{s}+(?:static{s}+)?([A-Za-z_][.{w}]*){s}*;",
+    "javascript": (
+        r"""(?:require\({s}*['"](?=[^'"]+['"]{s}*\))|from{s}+['"])([^'"]+)['"]"""
     ),
-    "go": re.compile(r"^\s*(?:import\s+)?\"([\w\./-]+)\"", re.M),
+    "go": r'(?dm)^{s}*(?:import{s}+)?"([./\-{w}]+)"',
 }
 
 
-@F.pandas_udf(T.StringType())
-def sha256_udf(content: pd.Series) -> pd.Series:
-    return content.fillna("").map(lambda s: hashlib.sha256(s.encode("utf-8")).hexdigest())
+def _unicode_class(pattern: str, every: str) -> str:
+    """Java class body listing every code point of ``every`` that
+    Python's ``re`` matches with ``pattern`` (``\\w`` or ``\\s``), as
+    ``\\x{..}`` ranges.  Java's own ``\\w``/``\\s`` are ASCII-only and
+    its Unicode flavours follow a different Unicode version, so the
+    class is derived from ``re`` itself: it matches by construction.
+
+    Java tests a class's items as one chain, each item after all the
+    ones before it, so a flat list of the ~730 ``\\w`` ranges costs
+    every character ~730 steps.  The ASCII ranges come first and the
+    rest sit in a nested class after them: ASCII text (and literal
+    characters placed before this body) is decided in a few steps.  On
+    a 10k-file repo table (4 cores) extraction took 0.40-0.58 s this
+    way against 0.68-1.19 s with the flat list."""
+
+    def cp(i: int) -> str:
+        return f"\\x{{{i:x}}}"
+
+    def body(spans) -> str:
+        return "".join(cp(a) + (f"-{cp(b)}" if b > a else "") for a, b in spans)
+
+    spans = [(m.start(), m.end() - 1) for m in re.finditer(pattern + "+", every)]
+    ascii_ = [(a, min(b, 0x7F)) for a, b in spans if a < 0x80]
+    rest = [(max(a, 0x80), b) for a, b in spans if b >= 0x80]
+    return body(ascii_) + (f"[{body(rest)}]" if rest else "")
+
+
+@functools.cache
+def _import_patterns() -> tuple[tuple[str, str], ...]:
+    """The Java import patterns, built once per process (one ``re`` scan
+    of all code points per class, ~0.2 s together)."""
+    every = "".join(map(chr, range(sys.maxunicode + 1)))
+    s = "[" + _unicode_class(r"\s", every) + "]"
+    w = _unicode_class(r"\w", every)
+    return tuple((lang, t.format(s=s, w=w)) for lang, t in _IMPORT_TEMPLATES.items())
+
+
+def _sha256(content: Column) -> Column:
+    return F.sha2(F.coalesce(content, F.lit("")), 256)
 
 
 def with_sha256(df: DataFrame, content_col: str = "content") -> DataFrame:
-    return df.withColumn("content_sha256", sha256_udf(F.col(content_col)))
+    return df.withColumn("content_sha256", _sha256(F.col(content_col)))
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _extract_imports_udf(lang: pd.Series, content: pd.Series) -> pd.Series:
-    out = []
-    for lg, text in zip(lang, content):
-        pat = _IMPORT_PATTERNS.get(lg)
-        if pat is None or text is None:
-            out.append([])
-            continue
-        found = pat.findall(text)
-        if found and isinstance(found[0], tuple):  # multi-group patterns
-            found = [next(g for g in t if g) for t in found if any(t)]
-        out.append(found)
-    return pd.Series(out)
+def _imports(lang: Column, content: Column) -> Column:
+    """``array<string>`` of imported names, in match order; empty for a
+    null ``content`` or a language without a pattern."""
+    none = F.array().cast("array<string>")
+    out = None
+    for lg, pat in _import_patterns():
+        found = F.coalesce(F.regexp_extract_all(content, F.lit(pat), 1), none)
+        out = (F.when if out is None else out.when)(lang == lg, found)
+    return out.otherwise(none)
 
 
 def extract_imports(df: DataFrame) -> DataFrame:
     """Adds ``imports array<string>`` (+ ``content_sha256`` if absent)."""
     if "content_sha256" not in df.columns:
         df = with_sha256(df)
-    return df.withColumn("imports", _extract_imports_udf(F.col("lang"), F.col("content")))
+    return df.withColumn("imports", _imports(F.col("lang"), F.col("content")))
 
 
 def module_providers(files: DataFrame) -> DataFrame:
@@ -93,7 +140,7 @@ def repo_edges(files: DataFrame, verify_invariant: bool = False) -> DataFrame:
     ex = extract_imports(files)
     if verify_invariant:
         bad = ex.filter(
-            sha256_udf(F.col("content")) != F.col("content_sha256")
+            _sha256(F.col("content")) != F.col("content_sha256")
         ).count()
         if bad:
             raise AssertionError(f"sha256 invariant violated for {bad} rows")

@@ -879,3 +879,30 @@ def test_all_shortest_paths_weighted_delta_identical(spark):
     }
     assert plain == bucketed
     assert plain[(0, 18)] == 18.0          # chain beats every shortcut
+
+
+@pytest.mark.parametrize("delta", [0.0, -1.0, float("nan"), float("inf")])
+def test_all_shortest_paths_weighted_rejects_bad_delta(spark, delta):
+    """A bucket width that is not positive and finite fails fast instead
+    of returning only the self pairs (0), spinning empty supersteps
+    (negative) or breaking the bucket arithmetic (nan, inf)."""
+    from neo4j_graph_algorithms_spark.operators import all_shortest_paths_weighted
+
+    g = Graph.from_edge_list(spark, [(0, 1, 1.0), (1, 2, 1.0)], vertices=range(3))
+    with pytest.raises(ValueError, match="delta"):
+        all_shortest_paths_weighted(g, sources=[0], delta=delta)
+
+
+def test_all_shortest_paths_weighted_delta_metrics(spark):
+    """The metrics path counts the rows each superstep relaxes without
+    changing the distances."""
+    from neo4j_graph_algorithms_spark.operators import all_shortest_paths_weighted
+
+    edges = [(i, i + 1, 1.0) for i in range(9)] + [(0, 6, 9.0)]
+    g = Graph.from_edge_list(spark, edges, vertices=range(10))
+    plain = sorted(map(tuple, all_shortest_paths_weighted(g, sources=[0]).collect()))
+    metrics = []
+    got = all_shortest_paths_weighted(g, sources=[0], delta=2.0, metrics=metrics)
+    assert sorted(map(tuple, got.collect())) == plain
+    assert metrics and all(m["relaxed_rows"] >= 0 for m in metrics)
+    assert sum(m["relaxed_rows"] for m in metrics) >= 10  # every vertex relaxes once

@@ -103,14 +103,6 @@ def test_article_rank_matches_numpy(spark, graph, iters):
         assert got[i] == pytest.approx(want[i], abs=1e-9), i
 
 
-def test_article_rank_adjacency_storage_matches_edges(spark, graph):
-    a = article_rank(graph, max_iterations=10, storage="edges")
-    b = article_rank(graph, max_iterations=10, storage="adjacency")
-    sa = {r["id"]: r["score"] for r in a.scores.collect()}
-    sb = {r["id"]: r["score"] for r in b.scores.collect()}
-    assert sa == sb  # bit-identical across storage layouts
-
-
 def test_article_rank_dampens_hubs_vs_pagerank(spark):
     """A low-out-degree feeder inflates its target less under
     ArticleRank than under PageRank (the +avg divisor) — the surface's

@@ -87,29 +87,6 @@ def test_pagerank_isolated_vertices_keep_alpha(spark):
     assert got[1] == pytest.approx(0.15 + 0.85 * 0.15, abs=1e-9)
 
 
-def test_pagerank_adjacency_storage_matches_edges(spark, f1_graph):
-    # salted CSR adjacency blocks must give bit-identical supersteps
-    e = pagerank(f1_graph, max_iterations=40, storage="edges")
-    a = pagerank(f1_graph, max_iterations=40, storage="adjacency")
-    se, sa = ({r["id"]: r["score"] for r in x.scores.collect()} for x in (e, a))
-    assert se.keys() == sa.keys()
-    for k in se:
-        assert se[k] == pytest.approx(sa[k], abs=1e-12), k
-
-
-def test_pagerank_adjacency_hub_salting(spark):
-    # a 1→many hub above hub_degree gets split across salted rows;
-    # scores must still match the unsalted run
-    edges = [(0, i) for i in range(1, 50)] + [(1, 2), (2, 3)]
-    g = Graph.from_edge_list(spark, edges, vertices=range(50))
-    plain = pagerank(g, max_iterations=10, storage="edges")
-    salted = pagerank(g, max_iterations=10, storage="adjacency", hub_degree=8)
-    sp = {r["id"]: r["score"] for r in plain.scores.collect()}
-    ss = {r["id"]: r["score"] for r in salted.scores.collect()}
-    for k in sp:
-        assert sp[k] == pytest.approx(ss[k], abs=1e-12), k
-
-
 def test_pagerank_stats_yield_row(spark, f1_graph):
     from neo4j_graph_algorithms_spark import pagerank
 

@@ -3,9 +3,11 @@
 BENCH/PLANS.md records a per-query audit of the executed plans; these
 tests pin the two invariants that must never regress silently:
 
-1. **No per-row Python evals** (``BatchEvalPython``) anywhere — the
-   only Python allowed in a plan is Arrow-batched (the sha256/import
-   extraction the north rule mandates as a pandas UDF).
+1. **No per-row Python evals** (``BatchEvalPython``) anywhere.  The
+   north rule's input hint forbids per-row Python, not built-ins:
+   sha256 and import extraction are plain column expressions
+   (``sources/extract.py``), and the only Python left in a batch plan
+   is the Arrow-batched multimodal decode ``mapInPandas``.
 2. **No sort-merge joins** in the audited analytical queries — every
    join is either a broadcast of a provably small side or a
    SHUFFLE_HASH of co-keyed aggregates; an SMJ appearing here means a

@@ -123,3 +123,40 @@ def test_doulion_p1_is_exact(spark):
     assert row["sampled_edges"] == 15
     assert row["sampled_triangles"] == 20
     assert row["est_triangles"] == pytest.approx(20.0)
+
+
+def test_triangle_stream_runs_under_its_scale_guards(spark, monkeypatch):
+    """Forced trigger: with the size gate at 0 and a tiny build budget
+    the guards suspend AQE and floor shuffle partitions; the returned
+    triangle set was computed under them (it has the floored partition
+    count) and the caller's session conf is unchanged afterwards.
+    doulion_estimate goes through triangle_stream and inherits this."""
+    import itertools
+
+    import networkx as nx
+
+    from neo4j_graph_algorithms_spark import doulion_estimate
+    from neo4j_graph_algorithms_spark.operators import triangles as T
+
+    G = nx.gnm_random_graph(40, 160, seed=3)
+    g = Graph.from_edge_list(spark, list(G.edges()), vertices=range(40))
+    n_und = G.number_of_edges()
+    monkeypatch.setattr(T, "_TRI_SMALL_EDGES", 0)
+    monkeypatch.setattr(T, "_TRI_BUILD_TARGET", 48)  # floor = |E| partitions
+    conf = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in conf}
+    assert int(before["spark.sql.shuffle.partitions"]) < n_und
+
+    tri = T.triangle_stream(g)
+    assert {k: spark.conf.get(k) for k in conf} == before
+    assert tri.rdd.getNumPartitions() == n_und
+    want = sorted(
+        tuple(sorted(c))
+        for c in itertools.combinations(range(40), 3)
+        if all(G.has_edge(a, b) for a, b in itertools.combinations(c, 2))
+    )
+    assert sorted(tuple(r) for r in tri.collect()) == want
+
+    est = doulion_estimate(g, p=1.0).first()
+    assert est["sampled_triangles"] == len(want)
+    assert {k: spark.conf.get(k) for k in conf} == before

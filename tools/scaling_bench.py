@@ -3,7 +3,7 @@
 
 Phase 1 (prep, once, not timed as the metric): generate the
 deterministic synthetic source-repo table (BASELINE.json input_hint
-schema), run the Arrow-UDF import-extraction pipeline, and write the
+schema), run the import-extraction pipeline, and write the
 resulting file→file edge table to parquet — the same artifact a real
 ingest pipeline would produce once and every analytics job would read.
 
@@ -127,7 +127,7 @@ def main() -> None:
 North metric: PageRank edges-processed/sec, supersteps to 1e-6
 convergence, identical deterministic input: synthetic source-repo table
 ({args.n_repos} repos x 50 files, BASELINE.json input_hint schema) ->
-Arrow-UDF import extraction -> file-level edge table, materialized to
+import extraction -> file-level edge table, materialized to
 parquet once (prep {prep.get('prep_seconds')}s) and read by every
 level.  {args.repeat} interleaved N/4N leg pairs, each a separate JVM
 with a 3-superstep warmup; best-of per level reported (all samples
