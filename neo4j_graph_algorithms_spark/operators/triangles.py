@@ -69,9 +69,9 @@ class TriangleCountResult:
 
 
 def _oriented_edges(
-    graph: Graph, guard_stack=None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(oriented edges with order keys, undirected degrees, vertex table).
+    graph: Graph, guard_stack=None, with_vertices: bool = False
+) -> tuple[DataFrame, DataFrame | None]:
+    """(oriented edges with order keys, vertex table or ``None``).
 
     Orientation key is (undirected degree, id); the oriented edge goes
     low-key → high-key.  Returned columns:
@@ -80,10 +80,12 @@ def _oriented_edges(
     The user's edge subtree (arbitrary SQL — at 100 TB the expensive
     scan) is evaluated EXACTLY ONCE: the raw projection is persisted,
     the canonical undirected set is eagerly checkpointed off that
-    cache, and the vertex table (which must include self-loop-only
-    vertices the canonical set drops) is checkpointed off the same
-    cache — previously the degree agg, the orientation joins, and the
-    caller's per-node relabel each re-ran the subtree.
+    cache, and with ``with_vertices`` the vertex table (which must
+    include self-loop-only vertices the canonical set drops) is
+    checkpointed off the same cache — previously the degree agg, the
+    orientation joins, and the caller's per-node relabel each re-ran
+    the subtree.  Only ``triangle_count`` needs the vertex table; on a
+    graph without one it costs a ``distinct`` shuffle job.
     """
     base = graph.edges.select("src", "dst").persist()
     base.count()
@@ -119,9 +121,8 @@ def _oriented_edges(
             needed = -(-n_und * 48 // _TRI_BUILD_TARGET)  # ceil
             if needed > n_part:
                 set_np(needed)
-    if graph._vertices is not None:  # noqa: SLF001
-        verts = graph.vertices
-    else:
+    verts = graph._vertices if with_vertices else None  # noqa: SLF001
+    if with_vertices and verts is None:
         verts = truncate_lineage(
             base.select(F.col("src").alias("id"))
             .union(base.select(F.col("dst").alias("id")))
@@ -157,7 +158,7 @@ def _oriented_edges(
         F.when(fwd, F.col("adeg")).otherwise(F.col("bdeg")).alias("sdeg"),
         F.when(fwd, F.col("bdeg")).otherwise(F.col("adeg")).alias("ddeg"),
     )
-    return oriented, deg, verts
+    return oriented, verts
 
 
 def _wedge_triangles(oe: DataFrame, close_bcast: bool = False) -> DataFrame:
@@ -219,7 +220,7 @@ def triangle_stream(graph: Graph) -> DataFrame:
     from contextlib import ExitStack
 
     with ExitStack() as stack:
-        oriented, _, _ = _oriented_edges(graph, stack)
+        oriented, _ = _oriented_edges(graph, stack)
         # materialized while the scale guards are still in force: a lazy
         # result would run after the stack restored AQE and partitions
         return truncate_lineage(_wedge_triangles(truncate_lineage(oriented)))
@@ -249,7 +250,7 @@ def triangle_count(graph: Graph, with_summary: bool = True) -> TriangleCountResu
 def _triangle_count_impl(
     graph: Graph, with_summary: bool, guard_stack=None
 ) -> TriangleCountResult:
-    oriented, _, verts = _oriented_edges(graph, guard_stack)
+    oriented, verts = _oriented_edges(graph, guard_stack, with_vertices=True)
     oe = oriented.persist()
     tri = _wedge_triangles(oe).persist()
     n_triangles = tri.count()
@@ -319,7 +320,7 @@ def transitivity(graph: Graph) -> DataFrame:
     from contextlib import ExitStack
 
     with ExitStack() as stack:
-        oriented, _, _ = _oriented_edges(graph, stack)
+        oriented, _ = _oriented_edges(graph, stack)
         oe = oriented.persist()
         n_tri = _wedge_triangles(oe).count()
         # sum d*(d-1) as exact long (each term is even) and halve the

@@ -87,7 +87,6 @@ def wcc(
     max_iterations: int = 200,
     checkpointer: SuperstepCheckpointer | None = None,
     checkpoint_interval: int = 1,
-    broadcast_frontier_rows: int | None = None,
     compute_set_count: bool = False,
     storage: str = "edges",
     hub_degree: int = 100_000,
@@ -130,7 +129,7 @@ def wcc(
     with aqe_suspended(spark):
         return _run(
             graph, g, n_part, max_iterations, checkpointer,
-            checkpoint_interval, broadcast_frontier_rows, compute_set_count,
+            checkpoint_interval, compute_set_count,
             storage, hub_degree, check_interval, local_finish_edges,
         )
 
@@ -243,7 +242,6 @@ def _run(
     max_iterations: int,
     checkpointer: SuperstepCheckpointer | None,
     checkpoint_interval: int,
-    broadcast_frontier_rows: int,
     compute_set_count: bool,
     storage: str,
     hub_degree: int,
@@ -313,31 +311,21 @@ def _run(
     state = truncate_lineage(state.repartition(n_part, "id"))  # eager
     cache.track(state)
     frontier = state.select(F.col("id").alias("src"), "comp")
-    frontier_rows = None
     load_millis = int(1000 * (time.time() - t_load0))
     t_compute0 = time.time()
 
     it = start_iter
     k_check = max(1, int(check_interval))
-    if checkpointer is not None or broadcast_frontier_rows is not None:
-        # durable saves need per-superstep materialization; the
-        # broadcast decision needs a per-superstep frontier size
+    if checkpointer is not None:
+        # durable saves need per-superstep materialization
         k_check = 1
     pending: list[DataFrame] = []
     while it < max_iterations:
         it += 1
         t0 = time.time()
-        f = frontier
-        if (
-            broadcast_frontier_rows is not None
-            and frontier_rows is not None
-            and frontier_rows <= broadcast_frontier_rows
-        ):
-            f = F.broadcast(f)
-        else:
-            # SHJ: stream edges unsorted, hash the frontier per
-            # partition (SMJ fallback re-sorts edges every superstep)
-            f = f.hint("SHUFFLE_HASH")
+        # SHJ: stream edges unsorted, hash the frontier per partition
+        # (SMJ fallback re-sorts edges every superstep)
+        f = frontier.hint("SHUFFLE_HASH")
         if storage == "adjacency":
             cand = (
                 both.join(f, "src")
@@ -386,7 +374,6 @@ def _run(
         frontier = joined.filter(F.col("changed")).select(
             F.col("id").alias("src"), "comp"
         )
-        frontier_rows = changed
 
     both.unpersist()
     components = state.select("id", F.col("comp").alias("set_id"))

@@ -160,3 +160,29 @@ def test_triangle_stream_runs_under_its_scale_guards(spark, monkeypatch):
     est = doulion_estimate(g, p=1.0).first()
     assert est["sampled_triangles"] == len(want)
     assert {k: spark.conf.get(k) for k in conf} == before
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_transitivity_builds_no_vertex_table(spark):
+    """transitivity never reads a vertex table, so on a graph without one
+    it runs no ``distinct`` job to build it: the same jobs as on the same
+    edges with a vertex table."""
+    import networkx as nx
+
+    from neo4j_graph_algorithms_spark.operators import transitivity
+
+    edges = list(nx.gnm_random_graph(30, 90, seed=5).edges())
+    bare = Graph.from_edge_list(spark, edges)
+    listed = Graph.from_edge_list(spark, edges, vertices={v for e in edges for v in e})
+    n_bare = _jobs(spark, "tr-bare", lambda: transitivity(bare).first())
+    n_listed = _jobs(spark, "tr-listed", lambda: transitivity(listed).first())
+    assert n_bare == n_listed
