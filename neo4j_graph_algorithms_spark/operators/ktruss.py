@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from ..graph import Graph
 from ..plans.checkpoint import SuperstepCache, aqe_suspended, truncate_lineage
 from .kcore import k_core
-from .triangles import _wedge_triangles
+from .triangles import _orient_by_degree, _undirected_degrees, _wedge_triangles
 
 
 #: delta rounds with at most this many removed edges run fully
@@ -75,53 +75,6 @@ class KTrussResult:
     iterations_ran: int
     edge_count: int
     metrics: list[dict] = field(default_factory=list)
-
-
-def _orient_by_degree(e: DataFrame, deg: DataFrame | None = None) -> DataFrame:
-    """Degree-orient a canonical (src < dst) edge set: low (degree, id)
-    endpoint → high, with both endpoint degrees attached — the input
-    shape ``_wedge_triangles`` expects.  ``deg`` (id, degree) may be
-    passed in to reuse an already-computed aggregate."""
-    if deg is None:
-        deg = (
-            e.select(F.col("src").alias("id"))
-            .union(e.select(F.col("dst").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
-    j = (
-        e.join(
-            deg.select(F.col("id").alias("src"), F.col("degree").alias("adeg"))
-            .hint("SHUFFLE_HASH"),
-            "src",
-        )
-        .join(
-            deg.select(F.col("id").alias("dst"), F.col("degree").alias("bdeg"))
-            .hint("SHUFFLE_HASH"),
-            "dst",
-        )
-    )
-    fwd = (F.col("adeg") < F.col("bdeg")) | (
-        (F.col("adeg") == F.col("bdeg")) & (F.col("src") < F.col("dst"))
-    )
-    return j.select(
-        F.when(fwd, F.col("src")).otherwise(F.col("dst")).alias("src"),
-        F.when(fwd, F.col("dst")).otherwise(F.col("src")).alias("dst"),
-        F.when(fwd, F.col("adeg")).otherwise(F.col("bdeg")).alias("sdeg"),
-        F.when(fwd, F.col("bdeg")).otherwise(F.col("adeg")).alias("ddeg"),
-    )
-
-
-def _undirected_degrees(e: DataFrame) -> DataFrame:
-    """(id, degree) over a canonical undirected edge set, checkpointed.
-    groupBy("id") already leaves the result hash-partitioned by id —
-    no extra repartition."""
-    return truncate_lineage(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
 
 
 def _dead_triangle_decs(
@@ -308,7 +261,7 @@ def k_truss(
         # orients the round-1 wedge join, and steers the removed-edge
         # wedge side in every delta round (degree staleness after
         # removals affects cost, never correctness)
-        deg = _undirected_degrees(edges)
+        deg = truncate_lineage(_undirected_degrees(edges))
         cache.track(edges, deg)
 
         # ---- (k-1)-core prefilter ------------------------------------
@@ -326,7 +279,7 @@ def k_truss(
         else:
             core = k_core(Graph(edges), k - 1, check_interval=2)
             edges = truncate_lineage(core.edges)
-            deg = _undirected_degrees(edges)
+            deg = truncate_lineage(_undirected_degrees(edges))
             cache.track(edges, deg)
             n_core = edges.count()
             metrics.append(
@@ -416,7 +369,9 @@ def k_truss(
                 break
             if n_removed * 4 >= n_kept:
                 # rebuild path — survivors shrank enough to re-enumerate
-                deg = _undirected_degrees(kept.select("src", "dst"))
+                deg = truncate_lineage(
+                    _undirected_degrees(kept.select("src", "dst"))
+                )
                 cache.track(es, deg)
                 ori = truncate_lineage(
                     _orient_by_degree(kept.select("src", "dst"), deg)
@@ -604,7 +559,7 @@ def truss_decomposition(
                 edge_count=0, metrics=metrics,
             )
 
-        deg = _undirected_degrees(edges)
+        deg = truncate_lineage(_undirected_degrees(edges))
         cache.track(edges, deg)
 
         # ---- round 1: full enumeration seeds the support table -------
@@ -707,7 +662,9 @@ def truss_decomposition(
                 break
             if n_removed * 4 >= n_kept:
                 # rebuild path — survivors shrank enough to re-enumerate
-                deg = _undirected_degrees(kept.select("src", "dst"))
+                deg = truncate_lineage(
+                    _undirected_degrees(kept.select("src", "dst"))
+                )
                 cache.track(es, deg, assigned)
                 ori = truncate_lineage(
                     _orient_by_degree(kept.select("src", "dst"), deg)

@@ -393,7 +393,8 @@ def _run_edges_fold(
             # conf; raise it too (restored by the caller's
             # shuffle_partitions_override) so gather output partitioning
             # keeps matching the edge table — the SHUFFLE_HASH scatter
-            # join stays zero-exchange
+            # join stays zero-exchange (the override is a floor: under a
+            # larger overlapping one, each superstep pays one exchange)
             set_shuffle_partitions(n_part)
     # filled by the first batch's job, which also derives the initial
     # frontier from it; `base` and `verts` are released after that job

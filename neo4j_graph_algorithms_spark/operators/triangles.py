@@ -21,13 +21,25 @@ Degree orientation bounds the wedge fan-out per vertex by its oriented
 out-degree ≤ O(√m) on any graph — the standard compact-forward bound —
 so hub vertices do not explode the self-join (the skew handling the
 north rule calls out for triangle counting; SURVEY.md §2.2).
+
+One census per graph, like the reference's single ``TriangleProc``
+enumeration: the first triangle statistic on a ``Graph`` object builds
+exact triangle and wedge totals and, unless it is ``transitivity``, a
+materialized ``(id, degree, triangles)`` table over every edge
+endpoint.  The object keeps them until it is dropped (the table is a
+``localCheckpoint``, freed by Spark's ContextCleaner); later calls read
+them.  A table whose blocks went with a lost executor is rebuilt; a
+``per_node`` already returned shares them and fails.  Derived graphs
+(``undirected()``, …) start without a census.
 """
 
 from __future__ import annotations
 
+import weakref
+from contextlib import ExitStack
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 import os as _os
@@ -35,6 +47,7 @@ import os as _os
 from ..graph import Graph
 from ..plans.checkpoint import (
     aqe_suspended,
+    checkpoint_blocks_present,
     shuffle_partitions_override,
     truncate_lineage,
 )
@@ -43,21 +56,15 @@ from ..plans.rows import one_row
 #: per-partition budget for the pipeline's |E|-row SHUFFLE_HASH build
 #: sides (the wedge edge-existence map and the closing-edge set, ~48
 #: B/row hashed).  The 10^8-edge scale smoke OOM'd the closing-edge
-#: build on an 8g local JVM once the cached oriented edges squeezed
-#: the execution pool; flooring shuffle partitions to keep each build
-#: under this budget makes the pipeline degrade into more waves
-#: instead of failing an allocation.  Bench scale (1.2M edges, 32
-#: partitions) never triggers.  Override: SPARK_GRAFT_TRI_BUILD_TARGET.
-_TRI_BUILD_TARGET = int(
-    _os.environ.get("SPARK_GRAFT_TRI_BUILD_TARGET", str(16 << 20))
-)
+#: build on an 8g local JVM; flooring shuffle partitions to this budget
+#: makes the pipeline degrade into more waves instead of failing an
+#: allocation.  Override: SPARK_GRAFT_TRI_BUILD_TARGET.
+_TRI_BUILD_TARGET = int(_os.environ.get("SPARK_GRAFT_TRI_BUILD_TARGET", 16 << 20))
 
 #: undirected-edge count below which the pipeline leaves AQE alone:
 #: coalescing small shuffles is a measured win on latency-bound bench
 #: graphs, and builds this small cannot fail their memory grant.
-_TRI_SMALL_EDGES = int(
-    _os.environ.get("SPARK_GRAFT_TRI_SMALL_EDGES", str(5_000_000))
-)
+_TRI_SMALL_EDGES = int(_os.environ.get("SPARK_GRAFT_TRI_SMALL_EDGES", 5_000_000))
 
 
 @dataclass
@@ -68,111 +75,107 @@ class TriangleCountResult:
     average_coefficient: float
 
 
-def _oriented_edges(
-    graph: Graph, guard_stack=None, with_vertices: bool = False
-) -> tuple[DataFrame, DataFrame | None]:
-    """(oriented edges with order keys, vertex table or ``None``).
+@dataclass(frozen=True)
+class _Census:
+    undirected_edges: int          # non-loop canonical pairs: sizes the guards
+    triangles: int
+    wedges: int
+    # (id, degree, triangles), materialized, with its node count and
+    # average coefficient; None when only the totals were built
+    table: DataFrame | None = None
+    nodes: int = 0
+    average_coefficient: float = 0.0
 
-    Orientation key is (undirected degree, id); the oriented edge goes
-    low-key → high-key.  Returned columns:
-    ``(src, dst, sdeg, ddeg)`` where (sdeg, src) < (ddeg, dst).
 
-    The user's edge subtree (arbitrary SQL — at 100 TB the expensive
-    scan) is evaluated EXACTLY ONCE: the raw projection is persisted,
-    the canonical undirected set is eagerly checkpointed off that
-    cache, and with ``with_vertices`` the vertex table (which must
-    include self-loop-only vertices the canonical set drops) is
-    checkpointed off the same cache — previously the degree agg, the
-    orientation joins, and the caller's per-node relabel each re-ran
-    the subtree.  Only ``triangle_count`` needs the vertex table; on a
-    graph without one it costs a ``distinct`` shuffle job.
-    """
-    base = graph.edges.select("src", "dst").persist()
-    base.count()
+#: each Graph object's census; an entry is dropped with its Graph
+_CENSUS: weakref.WeakKeyDictionary[Graph, _Census] = weakref.WeakKeyDictionary()
+
+
+def _coefficient() -> Column:
+    d = F.col("degree")
+    return F.when(d >= 2, 2.0 * F.col("triangles") / (d * (d - 1))).otherwise(0.0)
+
+
+def _guarded_pairs(graph: Graph, stack: ExitStack) -> tuple[DataFrame, int]:
+    """(eager checkpoint of the canonical ``src <= dst`` pairs, self-loops
+    kept; non-loop pair count, observed in the checkpoint job).  The
+    checkpoint is the one evaluation of the user's edge subtree; its
+    loops keep self-loop-only vertices.  The count decides the scale
+    guards, entered on ``stack``: below ``_TRI_SMALL_EDGES`` nothing
+    changes — AQE's coalescing HELPS latency-bound graphs
+    (triangle_counts_cop 11 s with AQE vs 26 s without at sf0.1).  Above
+    it, the 10^8-edge smoke showed AQE merging the SHUFFLE_HASH build
+    sides into oversized partitions, so AQE is suspended and shuffle
+    partitions are floored to keep every |E|-row build under the
+    ``_TRI_BUILD_TARGET`` per-partition budget."""
+    e = graph.edges.select("src", "dst")
     if graph.symmetrized:
-        und = base.filter(F.col("src") < F.col("dst"))
+        pairs = e.filter(F.col("src") <= F.col("dst"))
     else:
-        e0 = base.select(
+        pairs = e.select(
             F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        und = e0.filter(F.col("src") != F.col("dst")).dropDuplicates(["src", "dst"])
-    und = truncate_lineage(und)  # eager — frees base for the joins below
-    if guard_stack is not None:
-        # Size-dependent scale guards, decided once |E| is known and
-        # scoped to the CALLER's ExitStack (restores on its exit):
-        # below _TRI_SMALL_EDGES nothing changes — AQE's partition
-        # coalescing measurably HELPS latency-bound bench graphs
-        # (triangle_counts_cop 11 s with AQE vs 26 s without at sf0.1).
-        # Above it, the 10^8-edge smoke showed AQE coalescing merges
-        # the SHUFFLE_HASH build sides into few oversized partitions
-        # (hash-build allocation failures), so AQE is suspended and
-        # shuffle partitions are floored to keep every |E|-row build
-        # under the _TRI_BUILD_TARGET per-partition budget.
-        n_und = und.count()  # cheap: counts the fresh checkpoint RDD
-        if n_und > _TRI_SMALL_EDGES:
-            spark = graph.spark
-            guard_stack.enter_context(aqe_suspended(spark))
-            set_np = guard_stack.enter_context(
-                shuffle_partitions_override(spark)
-            )
-            n_part = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            needed = -(-n_und * 48 // _TRI_BUILD_TARGET)  # ceil
-            if needed > n_part:
-                set_np(needed)
-    verts = graph._vertices if with_vertices else None  # noqa: SLF001
-    if with_vertices and verts is None:
-        verts = truncate_lineage(
-            base.select(F.col("src").alias("id"))
-            .union(base.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-    base.unpersist()
-    deg = (
-        und.select(F.col("src").alias("id"))
-        .union(und.select(F.col("dst").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree"))
+        ).dropDuplicates(["src", "dst"])
+    obs = Observation()
+    pairs = truncate_lineage(
+        pairs.observe(obs, F.sum((F.col("src") != F.col("dst")).cast("long")).alias("n"))
     )
-    # SHUFFLE_HASH: build on the |V|-row degree side, stream the edges
-    # unsorted (an SMJ would sort the |E| side twice)
-    e = (
-        und.join(
-            deg.select(F.col("id").alias("src"), F.col("degree").alias("adeg"))
-            .hint("SHUFFLE_HASH"),
-            "src",
+    n_und = int(obs.get["n"] or 0)
+    _scale_guards(graph.spark, n_und, stack)
+    return pairs, n_und
+
+
+def _scale_guards(spark, n_und: int, stack: ExitStack) -> None:
+    if n_und > _TRI_SMALL_EDGES:
+        stack.enter_context(aqe_suspended(spark))
+        set_np = stack.enter_context(shuffle_partitions_override(spark))
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        needed = -(-n_und * 48 // _TRI_BUILD_TARGET)  # ceil
+        if needed > n_part:
+            set_np(needed)
+
+
+def _undirected_degrees(pairs: DataFrame) -> DataFrame:
+    """``(id, degree)`` over canonical ``(src <= dst)`` pairs in one
+    aggregate; a self-loop pair adds its vertex with degree 0."""
+    return (
+        pairs.select(
+            F.explode(F.array("src", "dst")).alias("id"),
+            (F.col("src") != F.col("dst")).cast("long").alias("e"),
         )
-        .join(
-            deg.select(F.col("id").alias("dst"), F.col("degree").alias("bdeg"))
-            .hint("SHUFFLE_HASH"),
-            "dst",
-        )
+        .groupBy("id")
+        .agg(F.sum("e").alias("degree"))
+    )
+
+
+def _orient_by_degree(e: DataFrame, deg: DataFrame) -> DataFrame:
+    """Degree-orient a loop-free canonical (src < dst) edge set: low
+    (degree, id) endpoint → high, as ``(src, dst, sdeg, ddeg)`` with
+    (sdeg, src) < (ddeg, dst) — the input shape ``_closed_wedges``
+    expects.  SHUFFLE_HASH: build on the |V|-row degree side, stream
+    the edges unsorted (an SMJ would sort the |E| side twice)."""
+    j = e.join(
+        deg.select(F.col("id").alias("src"), F.col("degree").alias("adeg"))
+        .hint("SHUFFLE_HASH"),
+        "src",
+    ).join(
+        deg.select(F.col("id").alias("dst"), F.col("degree").alias("bdeg"))
+        .hint("SHUFFLE_HASH"),
+        "dst",
     )
     fwd = (F.col("adeg") < F.col("bdeg")) | (
         (F.col("adeg") == F.col("bdeg")) & (F.col("src") < F.col("dst"))
     )
-    oriented = e.select(
+    return j.select(
         F.when(fwd, F.col("src")).otherwise(F.col("dst")).alias("src"),
         F.when(fwd, F.col("dst")).otherwise(F.col("src")).alias("dst"),
         F.when(fwd, F.col("adeg")).otherwise(F.col("bdeg")).alias("sdeg"),
         F.when(fwd, F.col("bdeg")).otherwise(F.col("adeg")).alias("ddeg"),
     )
-    return oriented, verts
 
 
-def _wedge_triangles(oe: DataFrame, close_bcast: bool = False) -> DataFrame:
-    """One row per triangle ``(a, b, c)``, ids ascending, from a
-    (materialized) oriented edge set ``(src, dst, sdeg, ddeg)``.
-
-    ``close_bcast`` broadcasts the closing edge set, making the semi
-    join map-side (the Σ deg²-row wedge stream is filtered where it is
-    produced instead of being exchanged).  A/B-measured OFF by
-    default: in local mode the broadcast build costs more than the
-    in-process exchange it saves (1.2M-edge close: 4.0-4.9 s vs
-    2.6-3.4 s SHUFFLE_HASH); on a multi-node cluster, where the wedge
-    exchange crosses the network, flip it on for edge sets that fit
-    the driver."""
+def _closed_wedges(oe: DataFrame) -> DataFrame:
+    """One row ``(u, v, w)`` per triangle — apex ``u``, in orientation
+    order — from an oriented edge set ``(src, dst, sdeg, ddeg)``."""
     e1 = oe.select(
         F.col("src").alias("u"), F.col("dst").alias("v"), F.col("ddeg").alias("vdeg")
     )
@@ -184,43 +187,87 @@ def _wedge_triangles(oe: DataFrame, close_bcast: bool = False) -> DataFrame:
     # payoff is the SEMI join below — its probe side is the wedge set
     # (Σ deg² rows), which an SMJ would SORT in full, while SHJ builds
     # the |E|-row edge-existence map and streams the wedges unsorted.
+    # (A broadcast closing set lost its A/B: 4.0-4.9 s vs 2.6-3.4 s.)
     wedges = e1.join(e2.hint("SHUFFLE_HASH"), "u").filter(
         (F.col("vdeg") < F.col("wdeg"))
         | ((F.col("vdeg") == F.col("wdeg")) & (F.col("v") < F.col("w")))
     )
     e3 = oe.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    e3 = F.broadcast(e3) if close_bcast else e3.hint("SHUFFLE_HASH")
-    tri = wedges.join(e3, ["v", "w"], "left_semi").select("u", "v", "w")
-    return tri.select(
+    return wedges.join(e3.hint("SHUFFLE_HASH"), ["v", "w"], "left_semi").select(
+        "u", "v", "w"
+    )
+
+
+def _wedge_triangles(oe: DataFrame) -> DataFrame:
+    """One row per triangle ``(a, b, c)``, ids ascending, from a
+    (materialized) oriented edge set ``(src, dst, sdeg, ddeg)``."""
+    return _closed_wedges(oe).select(
         F.array_sort(F.array("u", "v", "w")).alias("t")
     ).select(
         F.col("t")[0].alias("a"), F.col("t")[1].alias("b"), F.col("t")[2].alias("c")
     )
 
 
-def _undirected_degrees(oe: DataFrame) -> DataFrame:
-    """``(id, degree)`` from the oriented edge set (each undirected edge
-    appears exactly once, so incidences = undirected degree)."""
-    return (
-        oe.select(F.col("src").alias("id"))
-        .unionAll(oe.select(F.col("dst").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+def _census(graph: Graph, stack: ExitStack, per_vertex: bool) -> _Census:
+    """The graph's census, built once per ``Graph`` object (``per_vertex``:
+    with the table); its scale guards are entered on ``stack`` either
+    way, so the caller's own materialization runs under them.  Racing
+    builds store identical censuses, so no lock is needed."""
+    census = _CENSUS.get(graph)
+    if census is not None and (
+        not per_vertex
+        or (census.table is not None and checkpoint_blocks_present(census.table))
+    ):
+        _scale_guards(graph.spark, census.undirected_edges, stack)
+        return census
+    pairs, n_und = _guarded_pairs(graph, stack)
+    deg = _undirected_degrees(pairs)
+    oe = _orient_by_degree(pairs.filter(F.col("src") < F.col("dst")), deg).persist()
+    closing = _closed_wedges(oe)
+    if per_vertex:
+        # per-vertex counts from one explode + groupBy of the closing
+        # rows, joined into a checkpoint whose job observes the scalars
+        counts = (
+            closing.select(F.explode(F.array("u", "v", "w")).alias("id"))
+            .groupBy("id")
+            .agg(F.count(F.lit(1)).alias("triangles"))
+        )
+        obs, d = Observation(), F.col("degree")
+        table = truncate_lineage(
+            deg.join(counts, "id", "left").fillna(0, ["triangles"]).observe(
+                obs,
+                F.sum("triangles").alias("t"),
+                # Σ d·(d−1) as an exact long (each term is even), halved
+                # below — a double sum loses exactness past 2^53 wedges
+                F.sum(d * (d - 1)).alias("w"),
+                F.count(F.lit(1)).alias("nodes"),
+                F.avg(_coefficient()).alias("avg"),
+            )
+        )
+        m = obs.get
+        census = _Census(
+            n_und, int(m["t"] or 0) // 3, int(m["w"] or 0) // 2,
+            table, int(m["nodes"]), float(m["avg"] or 0.0),
+        )
+    else:
+        # totals only: Σ_v d·(d−1) is Σ over the edges of d_src + d_dst − 2
+        n_tri = closing.count()
+        w = oe.agg(F.sum(F.col("sdeg") + F.col("ddeg") - 2)).first()[0]
+        census = _Census(n_und, n_tri, int(w or 0) // 2)
+    oe.unpersist()
+    _CENSUS[graph] = census
+    return census
 
 
 def triangle_stream(graph: Graph) -> DataFrame:
     """``(a < b < c)`` one row per triangle — ``algo.triangle.stream``.
-
-    The oriented edge set is materialized once (eager lineage cut) so
-    the three self-join branches read a cached copy instead of
-    recomputing the degree-orientation join per branch.  The triangle
-    set is returned materialized, computed under the size guards of
-    ``_oriented_edges`` (which the caller's session no longer has)."""
-    from contextlib import ExitStack
-
+    Its own path (the census keeps counts, not triangles), returned
+    materialized under the scale guards, with the oriented edges
+    checkpointed once for the three self-join branches."""
     with ExitStack() as stack:
-        oriented, _ = _oriented_edges(graph, stack)
+        pairs, _ = _guarded_pairs(graph, stack)
+        und = pairs.filter(F.col("src") < F.col("dst"))
+        oriented = _orient_by_degree(und, _undirected_degrees(und))
         # materialized while the scale guards are still in force: a lazy
         # result would run after the stack restored AQE and partitions
         return truncate_lineage(_wedge_triangles(truncate_lineage(oriented)))
@@ -231,67 +278,32 @@ def triangle_count(graph: Graph, with_summary: bool = True) -> TriangleCountResu
     ``algo.triangleCount[.stream]`` with
     ``clusteringCoefficientProperty`` (``TriangleProc.java:151-222``).
 
-    ``per_node`` is fully materialized before the intermediate triangle
-    set is released — consuming the result never re-runs the wedge
-    join, and counts + coefficients come from ONE computation.
-
-    Above ``_TRI_SMALL_EDGES`` undirected edges the pipeline suspends
-    AQE and floors shuffle partitions (guards decided in
-    ``_oriented_edges`` once |E| is known — see the inline rationale;
-    both found by the 10^8-edge scale smoke).  Below it, plans are
-    exactly the round-4 bench plans: AQE coalescing measurably helps
-    latency-bound graphs."""
-    from contextlib import ExitStack
-
+    Reads the graph's triangle census (module docstring).  ``per_node``
+    is fully materialized: the census table, or the vertex table
+    left-joined to it (isolated vertices at 0), checkpointed under the
+    census's scale guards."""
     with ExitStack() as stack:
-        return _triangle_count_impl(graph, with_summary, stack)
-
-
-def _triangle_count_impl(
-    graph: Graph, with_summary: bool, guard_stack=None
-) -> TriangleCountResult:
-    oriented, verts = _oriented_edges(graph, guard_stack, with_vertices=True)
-    oe = oriented.persist()
-    tri = _wedge_triangles(oe).persist()
-    n_triangles = tri.count()
-    member = (
-        tri.select(F.col("a").alias("id"))
-        .unionAll(tri.select(F.col("b").alias("id")))
-        .unionAll(tri.select(F.col("c").alias("id")))
-    )
-    counts = member.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
-    per_node = (
-        verts.select("id")
-        .join(counts, "id", "left")
-        .join(_undirected_degrees(oe), "id", "left")
-        .select(
-            "id",
-            F.coalesce("triangles", F.lit(0)).alias("triangles"),
-            F.coalesce("degree", F.lit(0)).alias("degree"),
-        )
-        .withColumn(
-            "coefficient",
-            F.when(
-                F.col("degree") >= 2,
-                2.0 * F.col("triangles") / (F.col("degree") * (F.col("degree") - 1)),
-            ).otherwise(F.lit(0.0)),
-        )
-        .select("id", "triangles", "coefficient")
-    )
-    per_node = truncate_lineage(per_node)  # eager: owns its data now
-    node_count = 0
-    avg_coeff = 0.0
-    if with_summary:
-        row = per_node.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("coefficient").alias("avg")
-        ).first()
-        node_count = int(row["n"])
-        avg_coeff = float(row["avg"] or 0.0)
-    tri.unpersist()
-    oe.unpersist()
+        census = _census(graph, stack, per_vertex=True)
+        per_node = census.table
+        verts = graph._vertices  # noqa: SLF001
+        if verts is not None:
+            per_node = truncate_lineage(
+                verts.select("id")
+                .join(per_node.hint("SHUFFLE_HASH"), "id", "left")
+                .fillna(0, ["degree", "triangles"])
+            )
+    per_node = per_node.select("id", "triangles", _coefficient().alias("coefficient"))
+    node_count, avg_coeff = census.nodes, census.average_coefficient
+    if verts is not None:
+        node_count, avg_coeff = 0, 0.0
+        if with_summary:
+            row = per_node.agg(
+                F.count(F.lit(1)).alias("n"), F.avg("coefficient").alias("avg")
+            ).first()
+            node_count, avg_coeff = int(row["n"]), float(row["avg"] or 0.0)
     return TriangleCountResult(
         per_node=per_node,
-        triangle_count=int(n_triangles),
+        triangle_count=census.triangles,
         node_count=node_count,
         average_coefficient=avg_coeff,
     )
@@ -311,33 +323,20 @@ def transitivity(graph: Graph) -> DataFrame:
     fraction, which weights hubs by their wedge count, unlike the
     per-node average ``triangle_count`` reports).
 
-    Plan: the same degree-oriented wedge join as ``triangle_count``
-    (O(√m) fan-out bound) for the triangle total, plus one
-    map-side-combined degree aggregate for the wedge total — two
-    driver-job scalars, no new shuffle shapes.  Returns 0.0 when the
-    graph has no wedges.
+    Both totals come from the graph's triangle census: after any
+    triangle call on the same ``Graph`` object this one-row literal runs
+    no Spark job until collected.  Called first, it builds the totals
+    only, not the per-vertex table.  0.0 when the graph has no wedges.
     """
-    from contextlib import ExitStack
-
     with ExitStack() as stack:
-        oriented, _ = _oriented_edges(graph, stack)
-        oe = oriented.persist()
-        n_tri = _wedge_triangles(oe).count()
-        # sum d*(d-1) as exact long (each term is even) and halve the
-        # scalar — a double sum loses exactness past 2^53 total wedges,
-        # which hub-heavy graphs reach at the advertised scale
-        row = _undirected_degrees(oe).agg(
-            F.sum(F.col("degree").cast("long") * (F.col("degree") - 1)).alias("w")
-        ).first()
-        oe.unpersist()
-    wedges = int(row["w"] or 0) // 2
-    t = (3.0 * n_tri / wedges) if wedges else 0.0
+        census = _census(graph, stack, per_vertex=False)
+    n_tri, wedges = census.triangles, census.wedges
     return one_row(
         graph.spark,
         "triangles long, wedges long, transitivity double",
-        int(n_tri),
+        n_tri,
         wedges,
-        t,
+        (3.0 * n_tri / wedges) if wedges else 0.0,
     )
 
 

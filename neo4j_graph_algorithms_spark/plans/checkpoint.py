@@ -92,16 +92,33 @@ def checkpoint_rdd_id(df: DataFrame) -> int | None:
     return None
 
 
-# AQE (spark.sql.adaptive.enabled) is session-global; iterative
-# operators suspend it for their superstep loops (the loops' joins are
-# exchange-free by co-partitioning, so AQE only adds replanning
-# latency).  The save/restore is guarded by a refcounted lock so
-# nested/concurrent operator runs on one session restore the ORIGINAL
-# value exactly once — never each other's intermediate state.  Note the
-# conf stays off for any query that overlaps the suspension window;
-# that is inherent to a session-global knob and documented here.
-_AQE_LOCK = threading.Lock()
+def checkpoint_blocks_present(df: DataFrame) -> bool:
+    """Whether every block of a ``localCheckpoint``-ed DataFrame is still
+    held: a lost executor takes its blocks, which nothing can recompute.
+    Runs no Spark job."""
+    rid = checkpoint_rdd_id(df)
+    if rid is None:
+        return False
+    for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():  # noqa: SLF001
+        if info.id() == rid:
+            return info.numCachedPartitions() == info.numPartitions()
+    # only RDDs with a cached block are listed; one without partitions has none
+    return df._jdf.queryExecution().analyzed().rdd().getNumPartitions() == 0  # noqa: SLF001
+
+
+# AQE (spark.sql.adaptive.enabled) and the shuffle-partition count are
+# session-global; iterative operators suspend AQE for their superstep
+# loops (the loops' joins are exchange-free by co-partitioning, so AQE
+# only adds replanning latency) and floor the partition count for their
+# hash builds.  Both save/restores are refcounted per session under one
+# lock, so nested/concurrent operator runs on one session restore the
+# ORIGINAL value exactly once — never each other's intermediate state.
+# The conf stays changed for any query that overlaps the window; that
+# is inherent to a session-global knob.
+_CONF_LOCK = threading.Lock()
 _AQE_STATE: dict[int, tuple[int, str]] = {}  # session hash -> (depth, saved)
+# session hash -> (saved, {live override token: floor asked or None})
+_PARTITION_STATE: dict[int, tuple[str, dict[object, int | None]]] = {}
 
 
 @contextmanager
@@ -111,17 +128,32 @@ def shuffle_partitions_override(spark: SparkSession):
     restore-safe way for an operator to raise the session's partition
     count mid-run (e.g. the fold engine's build-side memory floor,
     which learns |V| only after the load phase has begun).  The setter
-    may be called zero or more times; the ORIGINAL value is restored
-    exactly once."""
-    saved = spark.conf.get("spark.sql.shuffle.partitions", "200")
+    may be called zero or more times.  ``set_np(n)`` sets a floor: while
+    overrides overlap on one session the count is the largest ``n`` any
+    live one asked for, so it can exceed ``n``.  The ORIGINAL value is
+    restored when the last live override exits."""
+    key, token, conf = id(spark), object(), "spark.sql.shuffle.partitions"
+
+    def apply() -> None:  # under _CONF_LOCK
+        asked = [n for n in live.values() if n is not None]
+        spark.conf.set(conf, str(max(asked)) if asked else saved)
 
     def set_np(n: int) -> None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(n)))
+        with _CONF_LOCK:
+            live[token] = int(n)
+            apply()
 
+    with _CONF_LOCK:
+        saved, live = _PARTITION_STATE.setdefault(key, (spark.conf.get(conf, "200"), {}))
+        live[token] = None
     try:
         yield set_np
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+        with _CONF_LOCK:
+            if live.pop(token) is not None or not live:
+                apply()
+            if not live:
+                del _PARTITION_STATE[key]
 
 
 @contextmanager
@@ -130,7 +162,7 @@ def aqe_suspended(spark: SparkSession, enabled: bool = False):
         yield
         return
     key = id(spark)
-    with _AQE_LOCK:
+    with _CONF_LOCK:
         depth, saved = _AQE_STATE.get(key, (0, None))
         if depth == 0:
             saved = spark.conf.get("spark.sql.adaptive.enabled", "true")
@@ -139,7 +171,7 @@ def aqe_suspended(spark: SparkSession, enabled: bool = False):
     try:
         yield
     finally:
-        with _AQE_LOCK:
+        with _CONF_LOCK:
             depth, saved = _AQE_STATE[key]
             if depth == 1:
                 spark.conf.set("spark.sql.adaptive.enabled", saved)

@@ -1,4 +1,4 @@
-"""Graph-abstraction unit tests: dense-id mapping, AQE guard."""
+"""Graph-abstraction unit tests: dense-id mapping, AQE and partition guards."""
 
 import os
 import sys
@@ -6,7 +6,10 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from neo4j_graph_algorithms_spark.graph import Graph
-from neo4j_graph_algorithms_spark.plans.checkpoint import aqe_suspended
+from neo4j_graph_algorithms_spark.plans.checkpoint import (
+    aqe_suspended,
+    shuffle_partitions_override,
+)
 
 
 def test_dense_ids_rank_and_determinism(spark):
@@ -33,6 +36,25 @@ def test_aqe_suspended_nested_restores_original(spark):
         # inner exit must NOT restore yet (refcount > 0)
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_shuffle_partitions_override_overlapping_restores_original(spark):
+    """Two overlapping overrides (entered and exited out of order, as two
+    operator runs on one session do): the live value is the largest
+    floor asked for, and the original comes back only when the last
+    override exits."""
+    key = "spark.sql.shuffle.partitions"
+    original = spark.conf.get(key)
+    assert original not in ("20", "40")
+    a, b = shuffle_partitions_override(spark), shuffle_partitions_override(spark)
+    a.__enter__()(40)
+    assert spark.conf.get(key) == "40"
+    b.__enter__()(20)
+    assert spark.conf.get(key) == "40"
+    a.__exit__(None, None, None)
+    assert spark.conf.get(key) == "20"
+    b.__exit__(None, None, None)
+    assert spark.conf.get(key) == original
 
 
 def test_adjacency_hub_split_block_shape(spark):

@@ -186,3 +186,177 @@ def test_transitivity_builds_no_vertex_table(spark):
     n_bare = _jobs(spark, "tr-bare", lambda: transitivity(bare).first())
     n_listed = _jobs(spark, "tr-listed", lambda: transitivity(listed).first())
     assert n_bare == n_listed
+
+
+# ---- the per-graph triangle census ------------------------------------
+
+# a K4, a triangle hanging off it, a tail; duplicate, reciprocal and
+# self-loop rows; vertex 9 has nothing but a self-loop
+_MESSY = [
+    (0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3),
+    (3, 4), (4, 5), (5, 3), (5, 6), (6, 7),
+    (0, 1), (1, 0), (2, 0), (4, 3), (2, 2), (5, 5), (9, 9),
+]
+
+
+def _nx_graph(edges, nodes=()):
+    import networkx as nx
+
+    G = nx.Graph()
+    G.add_nodes_from(nodes)
+    G.add_nodes_from(v for e in edges for v in e)
+    G.add_edges_from((a, b) for a, b in edges if a != b)
+    return G
+
+
+def _assert_matches_networkx(res, tr_row, G):
+    import networkx as nx
+
+    per = {r["id"]: (r["triangles"], r["coefficient"]) for r in res.per_node.collect()}
+    assert set(per) == set(G.nodes)
+    want_cc = nx.clustering(G)
+    for v, t in nx.triangles(G).items():
+        assert per[v][0] == t, v
+        assert per[v][1] == pytest.approx(want_cc[v], abs=1e-12), v
+    n_tri = sum(nx.triangles(G).values()) // 3
+    assert res.triangle_count == n_tri
+    assert res.node_count == G.number_of_nodes()
+    assert res.average_coefficient == pytest.approx(nx.average_clustering(G), abs=1e-12)
+    assert tr_row["triangles"] == n_tri
+    assert tr_row["wedges"] == sum(d * (d - 1) // 2 for _, d in G.degree())
+    assert tr_row["transitivity"] == pytest.approx(nx.transitivity(G), abs=1e-12)
+
+
+def test_census_self_loops_duplicates_reciprocals(spark):
+    g = Graph.from_edge_list(spark, _MESSY)
+    from neo4j_graph_algorithms_spark import transitivity
+
+    res = triangle_count(g)
+    _assert_matches_networkx(res, transitivity(g).first(), _nx_graph(_MESSY))
+
+
+def test_census_vertex_table_with_isolated_vertices(spark):
+    from neo4j_graph_algorithms_spark import transitivity
+
+    g = Graph.from_edge_list(spark, _MESSY, vertices=range(12))
+    tr = transitivity(g).first()  # builds the census first
+    res = triangle_count(g)
+    _assert_matches_networkx(res, tr, _nx_graph(_MESSY, range(12)))
+    assert {r["id"] for r in res.per_node.filter("triangles = 0").collect()} >= {8, 9, 10, 11}
+
+
+def test_census_undirected_view(spark):
+    from neo4j_graph_algorithms_spark import transitivity
+    from neo4j_graph_algorithms_spark.operators import triangles as T
+
+    base = Graph.from_edge_list(spark, _MESSY)
+    triangle_count(base)
+    g = base.undirected()
+    assert T._CENSUS.get(g) is None  # a derived graph starts without one
+    res = triangle_count(g)
+    _assert_matches_networkx(res, transitivity(g).first(), _nx_graph(_MESSY))
+
+
+def test_census_call_order_matches_fresh_graphs(spark):
+    """transitivity-then-triangle_count and the reverse, each on one
+    Graph object, give what each call gives on its own fresh graph.
+    transitivity first builds the totals only; triangle_count then
+    builds the per-vertex table."""
+    from neo4j_graph_algorithms_spark import transitivity
+    from neo4j_graph_algorithms_spark.operators import triangles as T
+
+    def make():
+        return Graph.from_edge_list(spark, _MESSY, vertices=range(11))
+
+    def rows(res):
+        return sorted(tuple(r) for r in res.per_node.collect()), (
+            res.triangle_count, res.node_count, res.average_coefficient)
+
+    tc_fresh, tr_fresh = rows(triangle_count(make())), transitivity(make()).first()
+    g = make()
+    tr_first = transitivity(g).first()
+    assert T._CENSUS[g].table is None
+    assert (rows(triangle_count(g)), tr_first) == (tc_fresh, tr_fresh)
+    assert T._CENSUS[g].table is not None
+    h = make()
+    tc_first = rows(triangle_count(h))
+    assert (tc_first, transitivity(h).first()) == (tc_fresh, tr_fresh)
+
+
+def test_census_is_reused_not_rebuilt(spark, monkeypatch):
+    """After triangle_count, transitivity is a literal that runs no job
+    until collected, and clustering_coefficients builds no wedge join."""
+    import networkx as nx
+
+    from neo4j_graph_algorithms_spark import transitivity
+    from neo4j_graph_algorithms_spark.operators import triangles as T
+
+    edges = list(nx.gnm_random_graph(30, 90, seed=5).edges())
+    bare = Graph.from_edge_list(spark, edges)
+    listed = Graph.from_edge_list(spark, edges, vertices=range(32))
+    tc = {g: triangle_count(g) for g in (bare, listed)}
+
+    def no_wedges(oe):
+        raise AssertionError("wedge join rebuilt")
+
+    monkeypatch.setattr(T, "_closed_wedges", no_wedges)
+    tr = {}
+    assert _jobs(spark, "census-tr", lambda: tr.update(row=transitivity(bare))) == 0
+    assert _jobs(spark, "census-tr-collect", lambda: tr["row"].first()) <= 1
+    assert tr["row"].first()["transitivity"] == pytest.approx(
+        nx.transitivity(nx.Graph(edges)), abs=1e-12
+    )
+    cc = {}
+    assert _jobs(spark, "census-cc", lambda: cc.update(df=clustering_coefficients(bare))) == 0
+    for g in (bare, listed):
+        got = {r["id"]: r["coefficient"] for r in clustering_coefficients(g).collect()}
+        assert got == {r["id"]: r["coefficient"] for r in tc[g].per_node.collect()}
+
+
+def test_census_runs_under_its_scale_guards(spark, monkeypatch):
+    """Forced trigger: with the size gate at 0 and a tiny build budget the
+    census and a vertex-table per_node are built with the floored
+    partition count, and the session's AQE and partition settings are
+    unchanged afterwards."""
+    import networkx as nx
+
+    from neo4j_graph_algorithms_spark import transitivity
+    from neo4j_graph_algorithms_spark.operators import triangles as T
+
+    G = nx.gnm_random_graph(20, 45, seed=7)
+    G.add_nodes_from([20, 21])
+    g = Graph.from_edge_list(spark, list(G.edges()), vertices=range(22))
+    n_und = G.number_of_edges()
+    monkeypatch.setattr(T, "_TRI_SMALL_EDGES", 0)
+    monkeypatch.setattr(T, "_TRI_BUILD_TARGET", 48)  # floor = |E| partitions
+    conf = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in conf}
+    assert int(before["spark.sql.shuffle.partitions"]) < n_und
+
+    res = triangle_count(g)
+    assert {k: spark.conf.get(k) for k in conf} == before
+    assert T._CENSUS[g].table.rdd.getNumPartitions() == n_und
+    assert res.per_node.rdd.getNumPartitions() == n_und
+    _assert_matches_networkx(res, transitivity(g).first(), G)
+    assert {k: spark.conf.get(k) for k in conf} == before
+
+
+def test_census_with_lost_blocks_is_rebuilt(spark):
+    """Forced trigger for a lost executor: with the census table's
+    checkpoint blocks dropped, the next triangle_count rebuilds the
+    census instead of failing on the missing blocks."""
+    from neo4j_graph_algorithms_spark.operators import triangles as T
+    from neo4j_graph_algorithms_spark.plans.checkpoint import checkpoint_rdd_id
+
+    g = Graph.from_edge_list(spark, _MESSY)
+    first = sorted(tuple(r) for r in triangle_count(g).per_node.collect())
+    lost = T._CENSUS[g].table
+    rid = checkpoint_rdd_id(lost)
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    while it.hasNext():
+        e = it.next()
+        if e._1() == rid:
+            e._2().unpersist(True)
+    again = triangle_count(g)
+    assert T._CENSUS[g].table is not lost
+    assert sorted(tuple(r) for r in again.per_node.collect()) == first

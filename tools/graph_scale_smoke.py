@@ -6,7 +6,9 @@ The sf0.1 bench (~10^5 edges) verifies plans but cannot surface the
 planner landmines that only appear when build sides stop fitting in
 task memory or a hub's adjacency stops fitting in one partition (the
 dedup smoke found three such at 1-5M docs).  This harness runs wcc,
-label_propagation, triangle_count and k_truss on a deterministic
+label_propagation, triangle_count (then transitivity on the same
+graph, which reuses its triangle census), transitivity alone on a fresh
+graph and k_truss on a deterministic
 power-law multigraph with:
 
 - a planted in-hub (vertex 0) of degree >= ``hub_degree`` (default
@@ -21,7 +23,7 @@ so every run is bit-identical and prep is one codegen'd projection.
 
 Usage:
   python tools/graph_scale_smoke.py [--edges 100000000] [--cores 32]
-      [--hub-degree 1000000] [--ops wcc,labelprop,triangles,ktruss]
+      [--hub-degree 1000000] [--ops wcc,labelprop,triangles,transitivity,ktruss]
       [--truss-edges 30000000]
 
 Per op prints one JSON line: {"op": ..., "edges": ..., "seconds": ...,
@@ -46,6 +48,7 @@ from neo4j_graph_algorithms_spark import (  # noqa: E402
     Graph,
     label_propagation,
     pagerank,
+    transitivity,
     triangle_count,
     wcc,
 )
@@ -188,11 +191,18 @@ def main() -> None:
 
     if "triangles" in ops:
         def run_tri():
-            g = Graph.from_edges(edges)
-            res = triangle_count(g)
-            return {"triangle_count": res.triangle_count}
+            # transitivity on the same Graph reads triangle_count's census
+            g, t0 = Graph.from_edges(edges), time.time()
+            n_tri, t1 = triangle_count(g).triangle_count, time.time()
+            tr = transitivity(g).first()
+            return {"triangle_count": n_tri, "triangle_count_s": round(t1 - t0, 1),
+                    "transitivity": tr["transitivity"], "wedges": tr["wedges"],
+                    "transitivity_s": round(time.time() - t1, 1)}
 
         leg("triangles", run_tri)
+
+    if "transitivity" in ops:  # alone, on a fresh Graph: it builds the totals itself
+        leg("transitivity", lambda: transitivity(Graph.from_edges(edges)).first().asDict())
 
     if "ktruss" in ops:
         truss_path = "/tmp/graph_smoke_edges_truss.parquet"
