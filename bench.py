@@ -5,8 +5,8 @@ local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
 
 The north metric (BASELINE.json) — PageRank edges-processed/sec with
 supersteps to 1e-6 convergence — is reported under ``pagerank_north``.
-Scaling-efficiency evidence across two parallelism levels lives in
-tools/scaling_bench.py → BENCH/BASELINE.md.
+Scaling-efficiency evidence across separate executor JVMs lives in
+tools/cluster_scaling_bench.py → BENCH/CLUSTER.md.
 """
 
 from __future__ import annotations
@@ -27,10 +27,8 @@ from neo4j_graph_algorithms_spark.sources.repo_source import synthetic_repo_file
 BENCH_QUERIES = [
     "pagerank_cs",
     "wcc_cop",
-    "wcc_cop_adj",          # same query, CSR adjacency layout
     "triangle_counts_cop",
     "labelprop_cop",
-    "labelprop_cop_adj",    # same query, CSR vote-block layout
     "degrees_cs",
     "anf_cop",            # FM-sketch neighborhood function (bit_or supersteps)
     "wcc_twophase_cop",   # star-contraction CC (O(log n) rounds)
@@ -98,7 +96,7 @@ def main() -> None:
     # dominates the metric ~8x, see BASELINE.md decomposition).
     # Generation/extraction is load, not compute: edges are materialized
     # to parquet before the clock starts, and the parquet is cached
-    # across bench runs (same convention as tools/scaling_bench.py).
+    # across bench runs.
     cache = "/tmp/spark_graft_north_edges_100k.parquet"
     if not os.path.isdir(cache):
         t0 = time.time()

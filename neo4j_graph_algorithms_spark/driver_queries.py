@@ -1517,15 +1517,6 @@ def q_wcc_twophase_cop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wcc_two_phase(g).components.select("id", "set_id")
 
 
-def q_wcc_cop_adj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same WCC over salted CSR adjacency blocks (storage='adjacency');
-    shares q_wcc_cop's oracle — the layouts must hash-match."""
-    g = Graph.from_edges(cop_edges(spark, sf_dir))
-    return wcc(g, storage="adjacency", check_interval=4).components.select(
-        "id", "set_id"
-    )
-
-
 def q_wcc_threshold_cs(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph.from_edges(cs_weighted_edges(spark, sf_dir), weight="weight")
     return wcc(g, threshold=3.0, check_interval=4).components.select("id", "set_id")
@@ -1624,20 +1615,6 @@ def q_labelprop_cop(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph.from_edges(cop_edges(spark, sf_dir))
     res = label_propagation(
         g, direction="BOTH", max_iterations=LP_ITERS, aggregate_interval=LP_ITERS
-    )
-    return res.labels.select("id", F.col("label").cast("long").alias("label"))
-
-
-def q_labelprop_cop_adj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same LP over CSR vote blocks (storage='adjacency'); shares
-    q_labelprop_cop's oracle — the layouts must hash-match."""
-    g = Graph.from_edges(cop_edges(spark, sf_dir))
-    res = label_propagation(
-        g,
-        direction="BOTH",
-        max_iterations=LP_ITERS,
-        storage="adjacency",
-        aggregate_interval=LP_ITERS,
     )
     return res.labels.select("id", F.col("label").cast("long").alias("label"))
 
@@ -2403,7 +2380,6 @@ QUERIES = {
     "pagerank_personalized_cs": q_pagerank_personalized_cs,
     "pagerank_cs_converged": q_pagerank_cs_converged,
     "wcc_cop": q_wcc_cop,
-    "wcc_cop_adj": q_wcc_cop_adj,
     "wcc_twophase_cop": q_wcc_twophase_cop,
     "wcc_incremental_cop": q_wcc_incremental_cop,
     "wcc_threshold_cs": q_wcc_threshold_cs,
@@ -2411,7 +2387,6 @@ QUERIES = {
     "triangle_total_cop": q_triangle_total_cop,
     "clustering_coeff_cop": q_clustering_coeff_cop,
     "labelprop_cop": q_labelprop_cop,
-    "labelprop_cop_adj": q_labelprop_cop_adj,
     "node_similarity_cop": q_node_similarity_cop,
     "adamic_adar_cop": q_adamic_adar_cop,
     "core_numbers_cop": q_core_numbers_cop,
@@ -2966,7 +2941,6 @@ SELECT (SELECT count(*) FROM v) AS nodes,
        (SELECT count(*) FROM seeds) AS set_count,
        (SELECT max(c.d) + 1 FROM md c JOIN fin ON fin.id = c.id AND fin.set_id = c.m) AS iterations""",
     "wcc_cop": _wcc_oracle(COP_EDGES_CTE, "cop_edges"),
-    "wcc_cop_adj": _wcc_oracle(COP_EDGES_CTE, "cop_edges"),
     "wcc_twophase_cop": _wcc_oracle(COP_EDGES_CTE, "cop_edges"),
     "wcc_incremental_cop": _wcc_oracle(COP_EDGES_CTE, "cop_edges"),
     "wcc_threshold_cs": f"""WITH RECURSIVE {CS_WEIGHTED_CTE},
@@ -3034,7 +3008,6 @@ SELECT deg.id AS id,
                   ELSE 0.0 END, 6) AS coefficient
 FROM deg LEFT JOIN cnt ON cnt.id = deg.id""",
     "labelprop_cop": _labelprop_oracle(),
-    "labelprop_cop_adj": _labelprop_oracle(),
     "random_walks_cop": f"""WITH RECURSIVE {COP_EDGES_CTE.replace("cop_edges AS (", "cop_edges AS MATERIALIZED (")},
 ue AS MATERIALIZED (SELECT src, dst FROM cop_edges UNION SELECT dst, src FROM cop_edges),
 v AS MATERIALIZED (SELECT DISTINCT src AS id FROM ue),

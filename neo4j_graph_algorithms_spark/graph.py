@@ -15,13 +15,12 @@ deterministic dense mapping is available for positional/bitmask kernels
 not arrays; "load direction" (``GraphLoader.withDirection``,
 ``GraphLoader.java:203-296``) becomes edge-table reversal / union.
 
-CSR-style adjacency blocks (``HugeGraphFactory.java:360-395`` builds a
-delta-compressed CSR) map to an ``adjacency()`` DataFrame
-``(src, salt, dsts array<long>, degree)`` — range/hash-partitioned by
-``src`` and *salted*: a hub vertex with out-degree above
-``hub_degree`` is split across several rows so no single task owns a
-whole hub row (the north rule's "salted, range-partitioned CSR-style
-adjacency blocks" / explicit skew handling).
+The reference's delta-compressed CSR (``HugeGraphFactory.java:360-395``)
+has no separate layout here: every operator scatters over the flat
+edge rows, and hub skew is absorbed by the map-side partial aggregation
+of each gather.  A salted CSR-style block layout was tried for
+PageRank, WCC and label propagation and lost its A/B measurements, so
+it was removed (README, "Scale design").
 """
 
 from __future__ import annotations
@@ -283,41 +282,6 @@ class Graph:
             default_weight=self.default_weight,
         )
 
-    # ------------------------------------------------------------------ #
-    # CSR-style salted adjacency blocks (north-rule storage layout)
-    # ------------------------------------------------------------------ #
-    def adjacency(
-        self,
-        hub_degree: int = 10_000,
-        num_partitions: int | None = None,
-        sort_neighbors: bool = True,
-    ) -> DataFrame:
-        """``(src long, salt int, dsts array<long>, degree long)``.
-
-        Non-hub vertices get one row (salt=0) holding their full sorted
-        neighbor list (the CSR row).  Vertices with out-degree >
-        ``hub_degree`` are split into ``ceil(degree/hub_degree)`` salted
-        rows so a single hub cannot skew one shuffle partition — the
-        two-stage-aggregation shape the north rule asks for.  The result
-        is hash-partitioned by (src, salt).
-        """
-        deg = self.edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-        e = self.edges.join(deg, "src")
-        e = e.withColumn(
-            "salt",
-            (F.crc32(F.concat_ws("_", F.col("src"), F.col("dst"))) % F.greatest(
-                F.lit(1), F.ceil(F.col("degree") / F.lit(hub_degree))
-            )).cast("int"),
-        )
-        grouped = e.groupBy("src", "salt").agg(
-            (F.sort_array(F.collect_list("dst")) if sort_neighbors else F.collect_list("dst")).alias("dsts"),
-            F.count(F.lit(1)).alias("block_degree"),
-            F.first("degree").alias("degree"),
-        )
-        if num_partitions:
-            grouped = grouped.repartition(num_partitions, "src", "salt")
-        return grouped.select("src", "salt", "dsts", "degree", "block_degree")
-
     def degree_distribution(self, direction: str = "OUT") -> DataFrame:
         """``(degree long, frequency long)`` histogram over all vertices
         (zero-degree vertices included) — the summary a capacity plan or
@@ -342,9 +306,9 @@ class Graph:
         ``σ = (α̂ − 1)/√n`` (Clauset, Shalizi & Newman 2009, eq. 3.7 —
         the estimator every web-graph degree-distribution claim is
         fitted with).  Real link graphs are heavy-tailed; α̂ ∈ [2, 3]
-        is the regime where hub-splitting (``Graph.adjacency``'s salt)
-        is mandatory, so this is the capacity-planning statistic read
-        before choosing the partition strategy.  ``alpha`` is NULL when
+        is the regime where a few hubs dominate the gather shuffles,
+        so this is the capacity-planning statistic read before
+        choosing the partition strategy.  ``alpha`` is NULL when
         no vertex reaches x_min.  One degree aggregate + one global
         aggregate — map-side combined, no windows."""
         if direction == "OUT":

@@ -21,7 +21,9 @@ Spark shape per superstep: scatter = edges ⋈ labels(neighbor side);
 gather = ``groupBy(voter-target, label).sum(weight)`` then per-vertex
 argmax via ``max_by(struct)`` — a two-level aggregation that keeps hub
 vertices inside map-side partial aggregation (no windowed sort, no
-single-partition shuffle).
+single-partition shuffle).  The vote edges stay flat rows: a salted
+CSR-style block layout (one row per neighbor holding its voters) lost
+its A/B against them and was removed (README, "Scale design").
 """
 
 from __future__ import annotations
@@ -81,8 +83,6 @@ def label_propagation(
     node_weights: DataFrame | None = None,
     checkpointer: SuperstepCheckpointer | None = None,
     checkpoint_interval: int = 1,
-    storage: str = "edges",
-    hub_degree: int = 100_000,
     aggregate_interval: int = 1,
 ) -> LabelPropagationResult:
     """``node_labels``: optional ``(id, label long)`` seed — the
@@ -95,18 +95,11 @@ def label_propagation(
     — iterating past a fixpoint is a no-op).  Opt-in because
     ``did_converge``/``iterations_ran`` are then only resolved at batch
     granularity; keep 1 when reference YIELD parity of the iteration
-    counter matters.
-
-    ``storage`` picks the scatter-side layout (same contract as
-    ``pagerank``/``wcc``): ``"adjacency"`` groups the voting edges into
-    salted CSR-style blocks ``(nbr, vs array<struct<voter, vote_w>>)``
-    so the per-superstep label join touches one row per neighbor
-    vertex; blocks above ``hub_degree`` incidences are salt-split."""
+    counter matters."""
     with aqe_suspended(graph.spark):
         return _run(
             graph, direction, max_iterations, node_labels, node_weights,
-            checkpointer, checkpoint_interval, storage, hub_degree,
-            aggregate_interval,
+            checkpointer, checkpoint_interval, aggregate_interval,
         )
 
 
@@ -118,8 +111,6 @@ def _run(
     node_weights: DataFrame | None,
     checkpointer: SuperstepCheckpointer | None,
     checkpoint_interval: int,
-    storage: str,
-    hub_degree: int,
     aggregate_interval: int = 1,
 ) -> LabelPropagationResult:
     t_load0 = time.time()
@@ -207,27 +198,8 @@ def _run(
         # the |V|-row build side shuffles to the edge side's layout; the
         # streamed edge side keeps its clustering (no sort — SHJ, not
         # SMJ), so nbr_partitioned survives the join
-    if storage == "adjacency":
-        # CSR-style blocks keyed by the label-carrying side: one row per
-        # (nbr, salt) holding its (voter, vote_w) incidences; blocks
-        # above hub_degree split across salted rows (same shape as
-        # Graph.adjacency, here with a payload struct per incidence)
-        deg = votes_edges.groupBy("nbr").agg(F.count(F.lit(1)).alias("degree"))
-        salted = votes_edges.join(deg, "nbr").withColumn(
-            "salt",
-            (
-                F.crc32(F.concat_ws("_", F.col("nbr"), F.col("voter")))
-                % F.greatest(F.lit(1), F.ceil(F.col("degree") / F.lit(hub_degree)))
-            ).cast("int"),
-        )
-        votes_edges = salted.groupBy("nbr", "salt").agg(
-            F.collect_list(F.struct("voter", "vote_w")).alias("vs")
-        )
-    elif storage != "edges":
-        raise ValueError(f"storage must be 'adjacency' or 'edges', got {storage!r}")
-    if storage == "adjacency" or not nbr_partitioned:
-        # salted blocks come out clustered by (nbr, salt); flat rows off
-        # a bucketed symmetrized store are already clustered by nbr
+    if not nbr_partitioned:
+        # rows off a bucketed symmetrized store are already clustered by nbr
         votes_edges = votes_edges.repartition(n_part, "nbr")
     votes_edges = votes_edges.persist()
     votes_edges.count()
@@ -262,19 +234,11 @@ def _run(
         lbl_nbr = labels.select(
             F.col("id").alias("nbr"), F.col("label").alias("cand")
         ).hint("SHUFFLE_HASH")
-        if storage == "adjacency":
-            tallies = (
-                votes_edges.join(lbl_nbr, "nbr")
-                .select(F.explode("vs").alias("v"), "cand")
-                .groupBy(F.col("v.voter").alias("voter"), F.col("cand"))
-                .agg(F.sum("v.vote_w").alias("total"))
-            )
-        else:
-            tallies = (
-                votes_edges.join(lbl_nbr, "nbr")
-                .groupBy("voter", "cand")
-                .agg(F.sum("vote_w").alias("total"))
-            )
+        tallies = (
+            votes_edges.join(lbl_nbr, "nbr")
+            .groupBy("voter", "cand")
+            .agg(F.sum("vote_w").alias("total"))
+        )
         # argmax with smallest-label tie-break: max_by over the orderable
         # struct (total, -cand) — larger total wins, then smaller label.
         best = tallies.groupBy(F.col("voter").alias("id")).agg(

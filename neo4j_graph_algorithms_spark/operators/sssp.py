@@ -18,7 +18,9 @@ i.e. frontier Bellman-Ford.  ``delta`` bucketing (delta-stepping's
 priority) maps to restricting each superstep's frontier to the lowest
 open distance bucket — fewer wasted relaxations on weighted graphs at
 the cost of more supersteps; with ``delta=None`` every improved vertex
-re-relaxes (plain Bellman-Ford, best for small-diameter graphs).
+re-relaxes (plain Bellman-Ford, best for small-diameter graphs).  The
+batched all-pairs loop (``all_shortest_paths_weighted``) has no
+bucketing: there it lost its wall-time A/B.
 
 Results match Dijkstra exactly on non-negative weights (both are exact
 SSSP); unreachable vertices get infinity, as in the reference
@@ -27,7 +29,6 @@ SSSP); unreachable vertices get infinity, as in the reference
 
 from __future__ import annotations
 
-import math
 import time
 from dataclasses import dataclass, field
 
@@ -268,7 +269,6 @@ def all_shortest_paths_weighted(
     graph: Graph,
     sources: list[int] | DataFrame | None = None,
     max_iterations: int = 10_000,
-    delta: float | None = None,
     metrics: list[dict] | None = None,
 ) -> DataFrame:
     """``(source_node_id, target_node_id, distance)`` — weighted
@@ -296,30 +296,12 @@ def all_shortest_paths_weighted(
     Σ reachable(source) rows — intrinsic to APSP output, and the
     reason ``sources`` exists.  Exact on non-negative weights.
 
-    ``delta`` enables the delta-stepping bucket discipline of the
-    single-source loop (``shortest_paths(delta=...)``), batched on a
-    per-source key: each superstep relaxes only each source's lowest
-    open distance bucket (frontier rows with ``distance <
-    (⌊min_open/δ⌋+1)·δ`` for THEIR source — the per-source threshold is
-    a groupBy-min joined back, not a driver round-trip); rows in higher
-    buckets are deferred and min-merged into the next frontier.  Same
-    exact distances (bucketing only defers, never drops); the trade is
-    the classic delta-stepping one — more supersteps, but each relaxes
-    far fewer speculative rows whose distances a later, cheaper path
-    would have re-improved.  On a high-diameter weighted chain fixture
-    (tests/test_breadth_ops.py) the relaxation volume drops while the
-    hash-identical result is preserved; with ``delta=None`` (default)
-    the loop is plain batched Bellman-Ford, best for small-diameter
-    graphs where supersteps are the scarce resource.
+    Plain Bellman-Ford only: per-source delta bucketing gave the same
+    distances and lost its wall-time A/B (BENCH/BASELINE.md).
 
     ``metrics``: optional caller-owned list; one dict per superstep is
-    appended (``iteration``, ``relaxed_rows`` = frontier rows actually
-    scattered this round, ``improved``) — the observable the delta A/B
-    (tools/apsp_delta_ab.py) compares across disciplines."""
-    if delta is not None and not (math.isfinite(delta) and delta > 0):
-        # 0 would relax nothing but the self pairs, a negative width
-        # spins empty supersteps, inf/nan break the bucket arithmetic
-        raise ValueError(f"delta must be a positive finite number, got {delta!r}")
+    appended (``iteration``, ``relaxed_rows`` = frontier rows
+    scattered this round, ``improved``)."""
     spark = graph.spark
     inf = float("inf")
     edges = graph.edges.select("src", "dst", "weight").persist()
@@ -341,30 +323,11 @@ def all_shortest_paths_weighted(
     it = 0
     while it < max_iterations:
         it += 1
-        f = frontier
-        deferred = None
-        if delta is not None:
-            # per-source lowest open bucket: a distributed min + join,
-            # not a driver round-trip (|sources| thresholds per round)
-            bounds = f.groupBy("source").agg(
-                ((F.floor(F.min("distance") / delta) + 1) * delta).alias("bend")
-            )
-            bounded = f.join(bounds.hint("SHUFFLE_HASH"), "source")
-            if metrics is not None:
-                # the relaxed-row count and the relax join both read the
-                # split: evaluate it once
-                bounded = truncate_lineage(bounded)
-            deferred = bounded.filter(F.col("distance") >= F.col("bend")).select(
-                "source", "id", "distance"
-            )
-            f = bounded.filter(F.col("distance") < F.col("bend")).select(
-                "source", "id", "distance"
-            )
         if metrics is not None:
-            relaxed_rows = f.count()
+            relaxed_rows = frontier.count()
         relax = (
             edges.join(
-                f.select(
+                frontier.select(
                     F.col("id").alias("src"), "source", F.col("distance").alias("d")
                 ).hint("SHUFFLE_HASH"),
                 "src",
@@ -399,22 +362,9 @@ def all_shortest_paths_weighted(
         frontier = joined.filter(F.col("improved")).select(
             "source", "id", "distance"
         )
-        if deferred is not None:
-            # min-merge: a deferred row whose distance improved this
-            # round appears in both branches; keep the smaller distance
-            frontier = (
-                frontier.unionByName(deferred)
-                .groupBy("source", "id")
-                .agg(F.min("distance").alias("distance"))
-            )
-            frontier = truncate_lineage(frontier)  # eager
-            cache.track(joined, frontier, bounded)  # retires next round
-            if improved == 0 and frontier.isEmpty():
-                break
-        else:
-            cache.track(joined)
-            if improved == 0:
-                break
+        cache.track(joined)
+        if improved == 0:
+            break
     out = truncate_lineage(
         dist.select(
             F.col("source").alias("source_node_id"),

@@ -22,7 +22,10 @@ geometrically; supersteps = O(diameter) on the un-doubled variant.
 The gather is ``groupBy(dst).min`` — map-side partial aggregation
 absorbs hub skew; the scatter join streams edges unsorted against a
 per-partition frontier hash map (SHUFFLE_HASH hint — the SMJ fallback
-would re-sort the edge set every superstep).
+would re-sort the edge set every superstep).  The message edges stay
+flat rows: a salted CSR-style block layout (one row per vertex holding
+its neighbor array) lost its A/B against them and was removed (README,
+"Scale design").
 """
 
 from __future__ import annotations
@@ -88,8 +91,6 @@ def wcc(
     checkpointer: SuperstepCheckpointer | None = None,
     checkpoint_interval: int = 1,
     compute_set_count: bool = False,
-    storage: str = "edges",
-    hub_degree: int = 100_000,
     check_interval: int = 1,
     local_finish_edges: int = 0,
 ) -> WccResult:
@@ -104,14 +105,6 @@ def wcc(
     components are identical; ``iterations_ran`` may overshoot by up to
     k-1 and per-superstep ``metrics`` are recorded at batch boundaries
     only.  The standard periodic-check trade for cluster-scale runs.
-
-    ``storage`` picks the scatter-side layout (same contract as
-    ``pagerank``; reference analogue: per-query graph-impl selection,
-    ``ProcedureConstants.java:58-60``): ``"edges"`` = flat rows,
-    ``"adjacency"`` = salted CSR-style blocks ``(src, dsts
-    array<long>)`` — one row per active vertex in the scatter join,
-    hubs above ``hub_degree`` split across salted rows.  Results are
-    identical (the gather is min over longs — exact).
 
     ``local_finish_edges``: opt-in endgame — if the (symmetrized,
     deduped) message-edge set holds at most this many undirected pairs,
@@ -130,13 +123,11 @@ def wcc(
         return _run(
             graph, g, n_part, max_iterations, checkpointer,
             checkpoint_interval, compute_set_count,
-            storage, hub_degree, check_interval, local_finish_edges,
+            check_interval, local_finish_edges,
         )
 
 
-def _message_edges(
-    graph: Graph, g: Graph, n_part: int, storage: str, hub_degree: int
-) -> DataFrame:
+def _message_edges(g: Graph, n_part: int) -> DataFrame:
     """Undirected message edges: each edge both ways, deduped,
     hash-clustered by ``src`` so the per-superstep scatter join against
     the id-partitioned state needs no exchange (one shuffle per
@@ -148,7 +139,7 @@ def _message_edges(
       ``load_graph(sym=True)`` store): the both-ways union and the
       pair dedup are already part of the plan — the projection is a
       pass-through;
-    - ``g.src_partitioned`` + symmetrized, flat storage: the bucketed
+    - ``g.src_partitioned`` + symmetrized: the bucketed
       scan already reports ``HashPartitioning(src)`` — **zero
       exchanges in the whole load phase** (the cross-run answer to the
       one-time edge shuffle, ``sources/graph_store.py``);
@@ -168,19 +159,6 @@ def _message_edges(
         both = g.edges.select("src", "dst").union(
             g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    if storage == "adjacency":
-        if not g.symmetrized:
-            both = both.dropDuplicates(["src", "dst"])
-        both = (
-            Graph(both, vertices=graph._vertices)
-            .adjacency(hub_degree=hub_degree, sort_neighbors=False)
-            .select("src", "dsts")
-        )
-        # adjacency blocks come out clustered by (src, salt) — the
-        # scatter join needs src alone, so this repartition stays.
-        return both.repartition(n_part, "src")
-    if storage != "edges":
-        raise ValueError(f"storage must be 'adjacency' or 'edges', got {storage!r}")
     if not (g.symmetrized and g.src_partitioned):
         both = both.repartition(n_part, "src")
     if not g.symmetrized:
@@ -243,20 +221,17 @@ def _run(
     checkpointer: SuperstepCheckpointer | None,
     checkpoint_interval: int,
     compute_set_count: bool,
-    storage: str,
-    hub_degree: int,
     check_interval: int = 1,
     local_finish_edges: int = 0,
 ) -> WccResult:
     t_load0 = time.time()
-    both = _message_edges(graph, g, n_part, storage, hub_degree)
+    both = _message_edges(g, n_part)
     both = both.persist()
     n_msg_edges = both.count()
 
     if (
         local_finish_edges
         and checkpointer is None
-        and storage == "edges"
         and n_msg_edges <= 2 * local_finish_edges
     ):
         # Endgame for small edge sets (the near-dup cluster graph, the
@@ -326,19 +301,11 @@ def _run(
         # SHJ: stream edges unsorted, hash the frontier per partition
         # (SMJ fallback re-sorts edges every superstep)
         f = frontier.hint("SHUFFLE_HASH")
-        if storage == "adjacency":
-            cand = (
-                both.join(f, "src")
-                .select(F.explode("dsts").alias("id"), "comp")
-                .groupBy("id")
-                .agg(F.min("comp").alias("cand"))
-            )
-        else:
-            cand = (
-                both.join(f, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("comp").alias("cand"))
-            )
+        cand = (
+            both.join(f, "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.min("comp").alias("cand"))
+        )
         joined = state.join(cand.hint("SHUFFLE_HASH"), "id", "left").select(
             "id",
             F.least(F.col("comp"), F.coalesce(F.col("cand"), F.col("comp"))).alias("comp"),

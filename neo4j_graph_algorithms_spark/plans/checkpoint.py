@@ -4,8 +4,9 @@ Two jobs, one mechanism (SURVEY.md §7 risk register):
 
 1. **Lineage truncation.**  An iterative DataFrame loop grows an
    unbounded logical plan; ``truncate_lineage`` breaks it every
-   superstep (``localCheckpoint(eager=True)``) — on a cluster, with a
-   durable ``checkpoint_dir``, a parquet round-trip instead.
+   superstep (``localCheckpoint(eager=True)`` at the serialized
+   ``MEMORY_AND_DISK`` level) — on a cluster, with a durable
+   ``checkpoint_dir``, a parquet round-trip instead.
 2. **Resume.**  With a ``SuperstepCheckpointer`` the state DataFrames of
    every k-th superstep land in a durable table
    (``{dir}/{algo}/{run_id}/iter=NNNN/{name}``, parquet here; Iceberg
@@ -31,6 +32,7 @@ from contextlib import contextmanager
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -42,42 +44,21 @@ def _iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def _checkpoint_storage_level():
-    """Storage level for superstep checkpoints — SERIALIZED by default.
-
-    ``localCheckpoint``'s implicit level stores one UnsafeRow object
-    per row; at 5M vertices × several live levels that is tens of
-    millions of small heap objects per superstep batch, and -Xlog:gc
-    runs showed 32% of a 32-core leg's wall in G1 pauses
-    (BENCH/BASELINE.md).  Serialized storage packs each cached
-    partition into a handful of large byte buffers instead: measured
-    on the identical 20M-edge north run, total GC pause time fell
-    148.9 s → 28.5 s (5.2×) and the cached footprint 4.6 GB → 0.9 GB
-    (5×), results bit-identical — so it is the default, and the cache
-    density matters even more at executor-scale heaps.
-    ``SPARK_GRAFT_CKPT_STORAGE`` overrides: ``deser`` (or ``default``)
-    restores the per-row-object level, any ``StorageLevel`` attribute
-    name picks that level.
-    """
-    name = os.environ.get("SPARK_GRAFT_CKPT_STORAGE", "").strip().lower()
-    from pyspark.storagelevel import StorageLevel
-
-    # PySpark-4 naming: MEMORY_AND_DISK is the *serialized* level and
-    # MEMORY_AND_DISK_DESER the per-row-object one (localCheckpoint's
-    # implicit default).  Keep the unambiguous _ser alias.
-    if not name or name == "memory_and_disk_ser":
-        return StorageLevel.MEMORY_AND_DISK
-    if name in ("default", "deser", "memory_and_disk_deser"):
-        return None
-    return getattr(StorageLevel, name.upper())
+# Superstep checkpoints are stored SERIALIZED.  localCheckpoint's
+# implicit level (MEMORY_AND_DISK_DESER in PySpark-4 naming) keeps one
+# UnsafeRow object per row: at 5M vertices x several live levels that
+# is tens of millions of small heap objects per superstep batch, and
+# -Xlog:gc showed 32% of a 32-core leg's wall in G1 pauses.  The
+# serialized level packs each cached partition into a few large byte
+# buffers; on the identical 20M-edge north run total GC pause time fell
+# 148.9 s -> 28.5 s (5.2x) and the cached footprint 4.6 GB -> 0.9 GB,
+# results bit-identical (BENCH/BASELINE.md).
+_CHECKPOINT_STORAGE_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
 def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     """Break lineage without durable storage (single-run loops)."""
-    level = _checkpoint_storage_level()
-    if level is None:
-        return df.localCheckpoint(eager=eager)
-    return df.localCheckpoint(eager=eager, storageLevel=level)
+    return df.localCheckpoint(eager=eager, storageLevel=_CHECKPOINT_STORAGE_LEVEL)
 
 
 def checkpoint_rdd_id(df: DataFrame) -> int | None:

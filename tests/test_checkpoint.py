@@ -208,34 +208,17 @@ def test_article_rank_resume_matches_direct(spark, tmp_path):
         assert got[k] == pytest.approx(direct[k], abs=1e-12)
 
 
-def test_checkpoint_storage_level_knob(monkeypatch):
-    """Serialized checkpoint storage is the default (BENCH/BASELINE.md:
-    5.2x less GC, 5x denser cache, bit-identical results); the env knob
-    restores the per-row-object level or picks any StorageLevel."""
-    from pyspark.storagelevel import StorageLevel
-
+def test_checkpoint_storage_level_is_serialized(spark):
+    """Superstep checkpoints are always stored serialized
+    (BENCH/BASELINE.md: 5.2x less GC pause time, 5x denser cache,
+    bit-identical results)."""
     from neo4j_graph_algorithms_spark.plans.checkpoint import (
-        _checkpoint_storage_level,
+        checkpoint_rdd_id,
+        truncate_lineage,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_CKPT_STORAGE", raising=False)
-    lvl = _checkpoint_storage_level()
-    assert lvl == StorageLevel.MEMORY_AND_DISK
-    assert not lvl.deserialized  # PySpark-4 MEMORY_AND_DISK is serialized
-
-    for name in ("deser", "default", "memory_and_disk_deser"):
-        monkeypatch.setenv("SPARK_GRAFT_CKPT_STORAGE", name)
-        assert _checkpoint_storage_level() is None  # Spark's implicit level
-
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_STORAGE", "memory_only")
-    assert _checkpoint_storage_level() == StorageLevel.MEMORY_ONLY
-
-
-def test_serialized_checkpoint_scores_bit_identical(spark, f1_graph, monkeypatch):
-    from neo4j_graph_algorithms_spark import pagerank
-
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_STORAGE", "deser")
-    rows = sorted(map(tuple, pagerank(f1_graph, max_iterations=7).scores.collect()))
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_STORAGE", "memory_and_disk_ser")
-    ser = sorted(map(tuple, pagerank(f1_graph, max_iterations=7).scores.collect()))
-    assert rows == ser
+    df = truncate_lineage(spark.range(100).repartition(4))
+    rid = checkpoint_rdd_id(df)
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()  # noqa: SLF001
+    (lvl,) = [i.storageLevel() for i in infos if i.id() == rid]
+    assert lvl.useMemory() and lvl.useDisk() and not lvl.deserialized()

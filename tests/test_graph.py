@@ -57,25 +57,6 @@ def test_shuffle_partitions_override_overlapping_restores_original(spark):
     assert spark.conf.get(key) == original
 
 
-def test_adjacency_hub_split_block_shape(spark):
-    """North-rule storage layout: a hub above hub_degree is split across
-    ceil(degree/hub_degree) salted rows; block degrees sum to the full
-    degree and every row keeps the FULL degree for the push divisor."""
-    from neo4j_graph_algorithms_spark import Graph
-
-    edges = [(0, i) for i in range(1, 26)] + [(1, 2)]
-    g = Graph.from_edge_list(spark, edges, vertices=range(26))
-    adj = g.adjacency(hub_degree=10).collect()
-    hub_rows = [r for r in adj if r["src"] == 0]
-    assert len(hub_rows) == 3  # ceil(25/10)
-    assert {r["salt"] for r in hub_rows} == {0, 1, 2}
-    assert all(r["degree"] == 25 for r in hub_rows)
-    assert sum(r["block_degree"] for r in hub_rows) == 25
-    assert sorted(d for r in hub_rows for d in r["dsts"]) == list(range(1, 26))
-    non_hub = [r for r in adj if r["src"] == 1]
-    assert len(non_hub) == 1 and non_hub[0]["salt"] == 0
-
-
 def test_summary_stats_vs_networkx(spark):
     import networkx as nx
     import pytest as pt

@@ -75,13 +75,3 @@ def test_lp_isolated_keeps_label(spark):
     g = Graph(edges, vertices=vertices)
     got = _labels(label_propagation(g, max_iterations=2))
     assert got == {0: 5, 1: 9}
-
-
-def test_labelprop_adjacency_storage_matches_edges(spark, f5):
-    from neo4j_graph_algorithms_spark import label_propagation
-
-    e = label_propagation(f5, max_iterations=4, storage="edges")
-    a = label_propagation(f5, max_iterations=4, storage="adjacency")
-    le = {r["id"]: r["label"] for r in e.labels.collect()}
-    la = {r["id"]: r["label"] for r in a.labels.collect()}
-    assert le == la

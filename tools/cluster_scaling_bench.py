@@ -13,8 +13,9 @@ cluster is the regime the ≥0.8 target describes.
 Protocol: master started with spark.deploy.spreadOut=false so a
 cores.max=8 app consolidates onto ONE worker (true N leg) while
 cores.max=32 spans all four.  Interleaved N/4N leg pairs, each leg a
-separate driver process, best-of per level (same noise-climate
-rationale as tools/scaling_bench.py).
+separate driver process, best-of per level (the host's co-tenant
+load swings same-config legs 1.2-2x; the best leg is the one least
+disturbed by it).
 
 Usage: python tools/cluster_scaling_bench.py [--edges-path P]
          [--repeat 2] [--out BENCH/CLUSTER.md] [--executor-cores 8]

@@ -12,8 +12,8 @@ graph and k_truss on a deterministic
 power-law multigraph with:
 
 - a planted in-hub (vertex 0) of degree >= ``hub_degree`` (default
-  10^6) — the skew case the salted CSR blocks / degree-oriented wedge
-  join / guarded walks are designed for;
+  10^6) — the skew case the map-side combined gathers / degree-oriented
+  wedge join / guarded walks are designed for;
 - a Zipf-ish destination distribution (inverse-CDF of u^3 over the
   vertex range) so the top-1k vertices carry a realistic heavy tail,
   not just one adversarial hub.
