@@ -832,43 +832,65 @@ def test_scc_forward_backward_seed_scoped(spark):
 def test_all_shortest_paths_weighted_matches_dijkstra(spark):
     """Batched multi-source weighted APSP (AllShortestPaths.java twin):
     distances for every (source, target) pair match per-source
-    Dijkstra; unreached pairs are absent; self pairs are 0.  The second
-    input is a weighted high-diameter chain with tempting-but-wrong
-    heavy shortcuts, each reached first and improved later by the cheap
-    chain path; it runs with ``metrics=``, which counts the rows each
-    superstep relaxes without changing the distances."""
+    Dijkstra; unreached pairs are absent; self pairs are 0."""
     from neo4j_graph_algorithms_spark.operators import all_shortest_paths_weighted
 
-    # chain 0-1-...-19 of weight-1 links + heavy shortcuts 0->k of
-    # weight k+5
-    chain = [(i, i + 1, 1.0) for i in range(19)]
-    chain += [(0, k, float(k + 5)) for k in range(5, 19, 3)]
-    for edges, n, sources, metrics in (
-        (SSSP_EDGES, 7, (0, 1, 5), None),
-        (chain, 20, (0, 3), []),
-    ):
-        g = Graph.from_edge_list(spark, edges, vertices=range(n))
-        out = all_shortest_paths_weighted(g, sources=list(sources), metrics=metrics)
-        got = {
-            (r["source_node_id"], r["target_node_id"]): r["distance"]
-            for r in out.collect()
-        }
-        G = _nx_digraph(edges)
-        want = {
-            (s, t): d
-            for s in sources
-            for t, d in nx.single_source_dijkstra_path_length(G, s).items()
-        }
-        assert set(got) == set(want)
-        for k in want:
-            assert got[k] == pytest.approx(want[k], abs=1e-12), k
-    assert got[(0, 18)] == 18.0          # chain beats every shortcut
-    assert metrics and all(m["relaxed_rows"] >= 0 for m in metrics)
-    # every reached (source, target) pair relaxes at least once
-    assert sum(m["relaxed_rows"] for m in metrics) >= len(want)
-    # sources=None covers every vertex
     g = Graph.from_edge_list(spark, SSSP_EDGES, vertices=range(7))
+    out = all_shortest_paths_weighted(g, sources=[0, 1, 5])
+    got = {
+        (r["source_node_id"], r["target_node_id"]): r["distance"]
+        for r in out.collect()
+    }
+    G = _nx_digraph(SSSP_EDGES)
+    want = {}
+    for s in (0, 1, 5):
+        for t, d in nx.single_source_dijkstra_path_length(G, s).items():
+            want[(s, t)] = d
+    assert set(got) == set(want)
+    for k in want:
+        assert got[k] == pytest.approx(want[k], abs=1e-12), k
+    # sources=None covers every vertex
     full = all_shortest_paths_weighted(g)
     assert full.filter(F.col("source_node_id") == F.col("target_node_id")).count() == 7
 
 
+def test_all_shortest_paths_weighted_delta_identical(spark):
+    """The batched plain Bellman-Ford loop and per-source delta-stepping
+    (``shortest_paths(delta=)``) give identical distances on a weighted
+    high-diameter chain with tempting-but-wrong heavy shortcuts (the
+    shape where Bellman-Ford floods speculative relaxations that are
+    improved later by the cheap chain path)."""
+    from neo4j_graph_algorithms_spark.operators import all_shortest_paths_weighted
+
+    # chain 0-1-...-19 of weight-1 links + heavy shortcuts 0->k of
+    # weight k+5 (each improved later by the cheap chain path)
+    edges = [(i, i + 1, 1.0) for i in range(19)]
+    edges += [(0, k, float(k + 5)) for k in range(5, 19, 3)]
+    g = Graph.from_edge_list(spark, edges, vertices=range(20))
+    batched = {
+        (r["source_node_id"], r["target_node_id"]): r["distance"]
+        for r in all_shortest_paths_weighted(g, sources=[0, 3]).collect()
+    }
+    bucketed = {
+        (s, r["id"]): r["distance"]
+        for s in (0, 3)
+        for r in shortest_paths(g, s, delta=4.0).distances.collect()
+        if r["distance"] != float("inf")
+    }
+    assert batched == bucketed
+    assert batched[(0, 18)] == 18.0          # chain beats every shortcut
+
+
+def test_all_shortest_paths_weighted_delta_metrics(spark):
+    """The metrics path counts the rows each superstep relaxes without
+    changing the distances."""
+    from neo4j_graph_algorithms_spark.operators import all_shortest_paths_weighted
+
+    edges = [(i, i + 1, 1.0) for i in range(9)] + [(0, 6, 9.0)]
+    g = Graph.from_edge_list(spark, edges, vertices=range(10))
+    plain = sorted(map(tuple, all_shortest_paths_weighted(g, sources=[0]).collect()))
+    metrics = []
+    got = all_shortest_paths_weighted(g, sources=[0], metrics=metrics)
+    assert sorted(map(tuple, got.collect())) == plain
+    assert metrics and all(m["relaxed_rows"] >= 0 for m in metrics)
+    assert sum(m["relaxed_rows"] for m in metrics) >= 10  # every vertex relaxes once

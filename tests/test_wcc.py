@@ -56,11 +56,6 @@ def test_wcc_set_id_is_min_member(spark, f3_graph):
     assert comp[FX.WCC_IDS["nH"]] == FX.WCC_IDS["nH"]
     assert comp[FX.WCC_IDS["nI"]] == FX.WCC_IDS["nH"]
     assert comp[FX.WCC_IDS["nJ"]] == FX.WCC_IDS["nJ"]
-    # a 49-leaf star: every leaf takes the hub's (minimum) id
-    edges = [(0, i) for i in range(1, 50)] + [(50, 51)]
-    g = Graph.from_edge_list(spark, edges, vertices=range(52))
-    comp = {r["id"]: r["set_id"] for r in wcc(g).components.collect()}
-    assert comp == {v: 0 if v < 50 else 50 for v in range(52)}
 
 
 def test_wcc_16_line_graphs(spark):
@@ -89,6 +84,18 @@ def test_wcc_stats_yield_row(spark, f3_graph):
     assert r["iterations"] == res.iterations_ran
     assert r["load_millis"] >= 0 and r["compute_millis"] >= 0
     assert r["write_millis"] == 0
+
+
+def test_wcc_adjacency_hub_salting(spark):
+    """A 49-leaf hub next to a separate pair: every leaf takes the hub's
+    (minimum) id, with the fixpoint tested every superstep or every
+    fourth."""
+    edges = [(0, i) for i in range(1, 50)] + [(50, 51)]
+    g = Graph.from_edge_list(spark, edges, vertices=range(52))
+    want = {v: 0 if v < 50 else 50 for v in range(52)}
+    for k in (1, 4):
+        res = wcc(g, check_interval=k)
+        assert {r["id"]: r["set_id"] for r in res.components.collect()} == want
 
 
 def test_wcc_batched_check_interval(spark):
