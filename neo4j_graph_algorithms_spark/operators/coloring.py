@@ -56,13 +56,9 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..graph import derived_vertices as _verts
-from ..plans.checkpoint import (
-    SuperstepCache,
-    SuperstepCheckpointer,
-    aqe_suspended,
-    truncate_lineage,
-)
+from ..plans.checkpoint import SuperstepCheckpointer, aqe_suspended
 from ..plans.rows import one_row
+from ..plans.superstep import superstep_fixpoint
 
 #: candidate-window cap — bounds the per-vertex candidate array a hub
 #: builds while keeping same-color collision probability ~1/CAP
@@ -131,27 +127,14 @@ def k1coloring(
         both.count()
 
         state = _verts(graph, base).select("id", F.lit(None).cast("long").alias("color"))
-        metrics: list[dict] = []
-        start_iter = 0
-        if checkpointer is not None:
-            last = checkpointer.latest_iteration()
-            if last is not None:
-                state = checkpointer.load(last, ["state"])["state"]
-                start_iter = last
-                metrics = checkpointer.metrics()
-        cache = SuperstepCache(spark)
-        state = truncate_lineage(state.repartition(n_part, "id"))
-        base.unpersist()  # message table persisted, state checkpointed
-        cache.track(state)
         load_millis = int(1000 * (time.time() - t_load0))
         t_compute0 = time.time()
-
         cap = F.lit(CANDIDATE_CAP).cast("long")
-        it = start_iter
-        remaining: int | None = None
-        while it < max_iterations:
-            it += 1
-            t0 = time.time()
+
+        def step(prev: DataFrame, it: int) -> DataFrame:
+            if base.is_cached:  # the engine has checkpointed the initial state
+                base.unpersist()
+            state = prev.select("id", "color")
             nbr = state.select(F.col("id").alias("src"), "color").hint("SHUFFLE_HASH")
             agg = (
                 both.join(nbr, "src")
@@ -208,37 +191,28 @@ def k1coloring(
                 .distinct()
             )
             winners = tent.join(losers, "id", "left_anti").select("id", "tent")
-            new_state = state.join(winners.hint("SHUFFLE_HASH"), "id", "left").select(
-                "id", F.coalesce("color", "tent").alias("color")
+            return (
+                state.join(winners.hint("SHUFFLE_HASH"), "id", "left")
+                .select("id", F.coalesce("color", "tent").alias("color"))
+                .withColumn("changed", F.col("color").isNull())  # still uncolored
             )
-            if checkpointer is not None:
-                new_state = checkpointer.save(
-                    it, {"state": new_state}, {"algorithm": "k1coloring"}
-                )["state"]
-            else:
-                new_state = truncate_lineage(new_state, eager=False)
-            remaining = new_state.filter(F.col("color").isNull()).count()
-            cache.track(new_state)
-            state = new_state
-            metrics.append(
-                {
-                    "algorithm": "k1coloring",
-                    "iteration": it,
-                    "uncolored": int(remaining),
-                    "wall_ms": int(1000 * (time.time() - t0)),
-                }
-            )
-            if remaining == 0:
-                break
 
-        both.unpersist()
-        colors = state.select("id", "color")
-        if remaining is None:  # zero rounds ran (resume at the cap)
+        try:
+            res = superstep_fixpoint(
+                state, step, max_iterations, checkpointer=checkpointer,
+                partition_cols=["id"], algorithm="k1coloring",
+            )
+        finally:
+            base.unpersist()
+            both.unpersist()
+        colors = res.state
+        remaining = 0
+        if not res.converged:
             remaining = colors.filter(F.col("color").isNull()).count()
         if remaining > 0:
             warnings.warn(
                 f"k1coloring: {remaining} vertices still uncolored after "
-                f"{it} rounds — result is PARTIAL (converged=False); "
+                f"{res.iterations_ran} rounds — result is PARTIAL (converged=False); "
                 "raise max_iterations",
                 RuntimeWarning,
                 stacklevel=2,
@@ -248,9 +222,9 @@ def k1coloring(
             kk = colors.select("color").distinct().count()
     return ColoringResult(
         colors=colors,
-        iterations_ran=it,
+        iterations_ran=res.iterations_ran,
         color_count=kk,
-        metrics=metrics,
+        metrics=res.metrics,
         load_millis=load_millis,
         compute_millis=int(1000 * (time.time() - t_compute0)),
         converged=remaining == 0,

@@ -36,12 +36,8 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..graph import derived_vertices as _verts
-from ..plans.checkpoint import (
-    SuperstepCache,
-    SuperstepCheckpointer,
-    aqe_suspended,
-    truncate_lineage,
-)
+from ..plans.checkpoint import SuperstepCheckpointer, aqe_suspended
+from ..plans.superstep import superstep_fixpoint
 
 
 @dataclass
@@ -79,74 +75,44 @@ def topological_levels(
         edges.count()
 
         state = _verts(graph, base).select("id", F.lit(0).cast("long").alias("level"))
-        metrics: list[dict] = []
-        start_iter = 0
-        if checkpointer is not None:
-            last = checkpointer.latest_iteration()
-            if last is not None:
-                state = checkpointer.load(last, ["state"])["state"]
-                start_iter = last
-                metrics = checkpointer.metrics()
-        cache = SuperstepCache(spark)
-        state = truncate_lineage(state.repartition(n_part, "id"))
-        base.unpersist()  # message table persisted, state checkpointed
-        cache.track(state)
-        frontier = state.select(F.col("id").alias("src"), "level")
         load_millis = int(1000 * (time.time() - t_load0))
         t_compute0 = time.time()
 
-        it = start_iter
-        converged = False
-        while it < max_iterations:
-            it += 1
-            t0 = time.time()
+        def step(prev: DataFrame, it: int) -> DataFrame:
+            if base.is_cached:  # the engine has checkpointed the initial state
+                base.unpersist()
+            frontier = prev.filter("changed").select(F.col("id").alias("src"), "level")
             cand = (
                 edges.join(frontier.hint("SHUFFLE_HASH"), "src")
                 .groupBy(F.col("dst").alias("id"))
                 .agg((F.max("level") + F.lit(1)).alias("cand"))
             )
-            joined = state.join(cand.hint("SHUFFLE_HASH"), "id", "left").select(
+            return prev.select("id", "level").join(cand.hint("SHUFFLE_HASH"), "id", "left").select(
                 "id",
                 F.greatest(F.col("level"), F.coalesce("cand", F.col("level"))).alias("level"),
                 (F.coalesce("cand", F.col("level")) > F.col("level")).alias("changed"),
             )
-            if checkpointer is not None:
-                joined = checkpointer.save(
-                    it, {"state": joined}, {"algorithm": "topological_levels"}
-                )["state"]
-            else:
-                joined = truncate_lineage(joined, eager=False)
-            changed = joined.filter(F.col("changed")).count()
-            cache.track(joined)
-            state = joined.select("id", "level")
-            metrics.append(
-                {
-                    "algorithm": "topological_levels",
-                    "iteration": it,
-                    "changed_vertices": int(changed),
-                    "wall_ms": int(1000 * (time.time() - t0)),
-                }
-            )
-            if changed == 0:
-                converged = True
-                break
-            frontier = joined.filter(F.col("changed")).select(
-                F.col("id").alias("src"), "level"
-            )
 
-        edges.unpersist()
-        if not converged:
+        try:
+            res = superstep_fixpoint(
+                state, step, max_iterations, checkpointer=checkpointer,
+                partition_cols=["id"], algorithm="topological_levels",
+            )
+        finally:
+            base.unpersist()
+            edges.unpersist()
+        if not res.converged:
             raise ValueError(
                 f"topological_levels did not stabilize after {max_iterations} "
                 "supersteps: the graph has a cycle, or a directed path deeper "
                 "than max_iterations (run algo.scc to locate cycles)"
             )
-        mx = state.agg(F.max("level")).collect()[0][0]
+        mx = res.state.agg(F.max("level")).collect()[0][0]
     return TopoResult(
-        levels=state,
-        iterations_ran=it,
+        levels=res.state,
+        iterations_ran=res.iterations_ran,
         max_level=int(mx) if mx is not None else None,
-        metrics=metrics,
+        metrics=res.metrics,
         load_millis=load_millis,
         compute_millis=int(1000 * (time.time() - t_compute0)),
     )

@@ -35,13 +35,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoint import (
-    SuperstepCache,
-    SuperstepCheckpointer,
-    aqe_suspended,
-    truncate_lineage,
-)
+from ..plans.checkpoint import SuperstepCheckpointer, aqe_suspended
 from ..plans.rows import one_row
+from ..plans.superstep import superstep_fixpoint
 
 OUTGOING = "OUTGOING"
 INCOMING = "INCOMING"
@@ -204,30 +200,13 @@ def _run(
     votes_edges = votes_edges.persist()
     votes_edges.count()
 
-    metrics: list[dict] = []
-    start_iter = 0
-    if checkpointer is not None:
-        last = checkpointer.latest_iteration()
-        if last is not None:
-            labels = checkpointer.load(last, ["labels"])["labels"]
-            start_iter = last
-            metrics = checkpointer.metrics()
-    cache = SuperstepCache(graph.spark)
-    labels = truncate_lineage(labels.repartition(n_part, "id"))  # eager
-    cache.track(labels)
-    base.unpersist()  # votes_edges persisted, labels checkpointed
-
     load_millis = int(1000 * (time.time() - t_load0))
     t_compute0 = time.time()
-    did_converge = False
-    it = start_iter
-    agg_interval = max(1, int(aggregate_interval))
-    if checkpointer is not None:
-        agg_interval = 1
-    pending = []
-    while it < max_iterations:
-        it += 1
-        t0 = time.time()
+
+    def step(prev: DataFrame, it: int) -> DataFrame:
+        if base.is_cached:  # the engine has checkpointed the initial labels
+            base.unpersist()
+        labels = prev.select("id", "label")
         # SHJ hints: stream the (larger) vote-edge side unsorted against
         # per-partition hash maps of the label/argmax sides (the SMJ
         # fallback would re-sort the vote edges every superstep)
@@ -244,47 +223,26 @@ def _run(
         best = tallies.groupBy(F.col("voter").alias("id")).agg(
             F.max(F.struct(F.col("total"), (-F.col("cand")).alias("neg"))).alias("win")
         ).select("id", (-F.col("win.neg")).alias("new_label"))
-        new_labels = labels.join(best.hint("SHUFFLE_HASH"), "id", "left").select(
+        return labels.join(best.hint("SHUFFLE_HASH"), "id", "left").select(
             "id",
             F.coalesce("new_label", "label").alias("label"),
             (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
         )
-        if checkpointer is not None and it % checkpoint_interval == 0:
-            new_labels = checkpointer.save(
-                it, {"labels": new_labels}, {"algorithm": "label_propagation"}
-            )["labels"]
-        else:
-            # lazy cut; the changed-count below is the materializing job
-            new_labels = truncate_lineage(new_labels, eager=False)
-        pending.append(new_labels)
-        changed = None
-        if (
-            checkpointer is not None
-            or it % agg_interval == 0
-            or it >= max_iterations
-        ):
-            changed = new_labels.filter(F.col("changed")).count()
-            cache.track(*pending)  # adopt the batch, retire the previous
-            pending = []
-        row = {
-            "algorithm": "label_propagation",
-            "iteration": it,
-            "wall_ms": int(1000 * (time.time() - t0)),
-        }
-        if changed is not None:
-            row["changed_vertices"] = int(changed)
-        metrics.append(row)
-        labels = new_labels.select("id", "label")
-        if changed == 0:
-            did_converge = True
-            break
 
-    votes_edges.unpersist()
+    try:
+        res = superstep_fixpoint(
+            labels, step, max_iterations, check_interval=aggregate_interval,
+            checkpointer=checkpointer, checkpoint_interval=checkpoint_interval,
+            partition_cols=["id"], algorithm="label_propagation",
+        )
+    finally:
+        base.unpersist()
+        votes_edges.unpersist()
     return LabelPropagationResult(
-        labels=labels,
-        iterations_ran=it,
-        did_converge=did_converge,
-        metrics=metrics,
+        labels=res.state,
+        iterations_ran=res.iterations_ran,
+        did_converge=res.converged,
+        metrics=res.metrics,
         load_millis=load_millis,
         compute_millis=int(1000 * (time.time() - t_compute0)),
     )

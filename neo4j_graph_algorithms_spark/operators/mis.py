@@ -33,7 +33,6 @@ the superstep cache).
 
 from __future__ import annotations
 
-import time
 import warnings
 from dataclasses import dataclass, field
 
@@ -42,13 +41,9 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..graph import derived_vertices as _verts
-from ..plans.checkpoint import (
-    SuperstepCache,
-    SuperstepCheckpointer,
-    aqe_suspended,
-    truncate_lineage,
-)
+from ..plans.checkpoint import SuperstepCheckpointer, aqe_suspended
 from ..plans.rows import one_row
+from ..plans.superstep import superstep_fixpoint
 
 
 @dataclass
@@ -107,24 +102,11 @@ def maximal_independent_set(
         state = _verts(graph, base).select(
             "id", F.lit(None).cast("boolean").alias("in_set")
         )
-        metrics: list[dict] = []
-        start_iter = 0
-        if checkpointer is not None:
-            last = checkpointer.latest_iteration()
-            if last is not None:
-                state = checkpointer.load(last, ["state"])["state"]
-                start_iter = last
-                metrics = checkpointer.metrics()
-        cache = SuperstepCache(spark)
-        state = truncate_lineage(state.repartition(n_part, "id"))
-        base.unpersist()  # message table persisted, state checkpointed
-        cache.track(state)
 
-        it = start_iter
-        remaining: int | None = None
-        while it < max_iterations:
-            it += 1
-            t0 = time.time()
+        def step(prev: DataFrame, it: int) -> DataFrame:
+            if base.is_cached:  # the engine has checkpointed the initial state
+                base.unpersist()
+            state = prev.select("id", "in_set")
             s = F.col("id").cast("string")
             pri = F.concat(F.md5(F.concat(F.lit(f"{it}:"), s)), F.lpad(s, 20, "0"))
             live = state.filter(F.col("in_set").isNull()).select("id", pri.alias("pri"))
@@ -151,7 +133,7 @@ def maximal_independent_set(
                 .select(F.col("dst").alias("id"))
                 .distinct()
             )
-            new_state = (
+            return (
                 state.join(
                     winners.select("id", F.lit(True).alias("won")).hint("SHUFFLE_HASH"),
                     "id",
@@ -169,35 +151,25 @@ def maximal_independent_set(
                     .when(F.col("lost").isNotNull(), F.lit(False))
                     .alias("in_set"),
                 )
+                .withColumn("changed", F.col("in_set").isNull())  # still live
             )
-            if checkpointer is not None:
-                new_state = checkpointer.save(
-                    it, {"state": new_state}, {"algorithm": "mis"}
-                )["state"]
-            else:
-                new_state = truncate_lineage(new_state, eager=False)
-            remaining = new_state.filter(F.col("in_set").isNull()).count()
-            cache.track(new_state)
-            state = new_state
-            metrics.append(
-                {
-                    "algorithm": "mis",
-                    "iteration": it,
-                    "live": int(remaining),
-                    "wall_ms": int(1000 * (time.time() - t0)),
-                }
-            )
-            if remaining == 0:
-                break
 
-        both.unpersist()
-        members = state.select("id", "in_set")
-        if remaining is None:  # zero rounds ran (resume at the cap)
+        try:
+            res = superstep_fixpoint(
+                state, step, max_iterations, checkpointer=checkpointer,
+                partition_cols=["id"], algorithm="mis",
+            )
+        finally:
+            base.unpersist()
+            both.unpersist()
+        members = res.state
+        remaining = 0
+        if not res.converged:
             remaining = members.filter(F.col("in_set").isNull()).count()
         if remaining > 0:
             warnings.warn(
                 f"maximal_independent_set: {remaining} vertices still "
-                f"undecided after {it} rounds — result is PARTIAL "
+                f"undecided after {res.iterations_ran} rounds — result is PARTIAL "
                 "(converged=False); raise max_iterations",
                 RuntimeWarning,
                 stacklevel=2,
@@ -207,8 +179,8 @@ def maximal_independent_set(
             size = members.filter(F.col("in_set")).count()
     return MisResult(
         members=members,
-        iterations_ran=it,
+        iterations_ran=res.iterations_ran,
         set_size=size,
-        metrics=metrics,
+        metrics=res.metrics,
         converged=remaining == 0,
     )

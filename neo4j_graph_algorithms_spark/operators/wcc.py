@@ -44,6 +44,7 @@ from ..plans.checkpoint import (
     truncate_lineage,
 )
 from ..plans.rows import one_row
+from ..plans.superstep import superstep_fixpoint
 
 
 @dataclass
@@ -273,85 +274,43 @@ def _run(
         vsrc = both.select(F.col("src").alias("id")).distinct()
     else:
         vsrc = graph.vertices
-    state = vsrc.select("id", F.col("id").alias("comp"))
-    metrics: list[dict] = []
-    start_iter = 0
-    if checkpointer is not None:
-        last = checkpointer.latest_iteration()
-        if last is not None:
-            state = checkpointer.load(last, ["state"])["state"]
-            start_iter = last
-            metrics = checkpointer.metrics()
-    cache = SuperstepCache(graph.spark)
-    state = truncate_lineage(state.repartition(n_part, "id"))  # eager
-    cache.track(state)
-    frontier = state.select(F.col("id").alias("src"), "comp")
+    init = vsrc.select("id", F.col("id").alias("comp"))
     load_millis = int(1000 * (time.time() - t_load0))
     t_compute0 = time.time()
 
-    it = start_iter
-    k_check = max(1, int(check_interval))
-    if checkpointer is not None:
-        # durable saves need per-superstep materialization
-        k_check = 1
-    pending: list[DataFrame] = []
-    while it < max_iterations:
-        it += 1
-        t0 = time.time()
-        # SHJ: stream edges unsorted, hash the frontier per partition
-        # (SMJ fallback re-sorts edges every superstep)
-        f = frontier.hint("SHUFFLE_HASH")
+    def step(prev: DataFrame, it: int) -> DataFrame:
+        # only vertices whose comp changed last superstep re-send; SHJ
+        # streams edges unsorted against the per-partition frontier hash
+        # map (the SMJ fallback re-sorts edges every superstep)
+        frontier = prev.filter("changed").select(F.col("id").alias("src"), "comp")
         cand = (
-            both.join(f, "src")
+            both.join(frontier.hint("SHUFFLE_HASH"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("comp").alias("cand"))
         )
-        joined = state.join(cand.hint("SHUFFLE_HASH"), "id", "left").select(
+        return prev.select("id", "comp").join(cand.hint("SHUFFLE_HASH"), "id", "left").select(
             "id",
             F.least(F.col("comp"), F.coalesce(F.col("cand"), F.col("comp"))).alias("comp"),
             (F.coalesce(F.col("cand"), F.col("comp")) < F.col("comp")).alias("changed"),
         )
-        if checkpointer is not None and it % checkpoint_interval == 0:
-            joined = checkpointer.save(
-                it, {"state": joined}, {"algorithm": "wcc"}
-            )["state"]
-        else:
-            # lazy cut; the changed-count below is the materializing job
-            joined = truncate_lineage(joined, eager=False)
-        pending.append(joined)
-        at_boundary = it % k_check == 0 or it >= max_iterations
-        changed = None
-        if at_boundary:
-            changed = joined.filter(F.col("changed")).count()
-            # the batch is materialized (every lazy level cached during
-            # the count's job): adopt it, retire the previous batch
-            cache.track(*pending)
-            pending = []
-            metrics.append(
-                {
-                    "algorithm": "wcc",
-                    "iteration": it,
-                    "changed_vertices": int(changed),
-                    "wall_ms": int(1000 * (time.time() - t0)),
-                }
-            )
-        state = joined.select("id", "comp")
-        if changed == 0:
-            break
-        frontier = joined.filter(F.col("changed")).select(
-            F.col("id").alias("src"), "comp"
-        )
 
-    both.unpersist()
-    components = state.select("id", F.col("comp").alias("set_id"))
+    try:
+        res = superstep_fixpoint(
+            init, step, max_iterations, check_interval=check_interval,
+            checkpointer=checkpointer, checkpoint_interval=checkpoint_interval,
+            partition_cols=["id"], algorithm="wcc",
+        )
+    finally:
+        both.unpersist()
+    components = res.state.select("id", F.col("comp").alias("set_id"))
     set_count = None
     if compute_set_count:
         set_count = components.select("set_id").distinct().count()
     return WccResult(
         components=components,
-        iterations_ran=it,
+        iterations_ran=res.iterations_ran,
         set_count=set_count,
-        metrics=metrics,
+        metrics=res.metrics,
         load_millis=load_millis,
         compute_millis=int(1000 * (time.time() - t_compute0)),
     )

@@ -1,36 +1,38 @@
-"""Public superstep-fixpoint primitive — write custom iterative graph
-algorithms with the engine's own loop discipline.
+"""The superstep loop shared by the count-to-zero operators, and the
+public primitive for custom iterative graph algorithms.
 
-Every iterative operator in this engine (PageRank, WCC, label
-propagation, SCC, k-core, Louvain, ANF, …) is the same loop wearing a
-different step function: transform the state DataFrame, cut its
-lineage so the plan stays constant-size, materialize once per check
-boundary, retire the previous superstep's cached checkpoint, stop at a
-fixpoint, optionally persist every state durably so the run resumes
-mid-algorithm (the reference has no public analogue — its
-``Algorithm`` base class, ``core/.../Algorithm.java:28-58``, is
-termination/progress plumbing only; users cannot bring their own
-superstep).
+wcc's min-label loop, label propagation, topological levels, maximal
+independent set and k1-coloring are one Pregel-style vote-to-halt loop
+(Malewicz et al., SIGMOD 2010) with different step functions: build the
+next state from the previous one, cut its lineage so the plan stays
+constant-size, materialize once per check boundary, retire the previous
+batch's cached checkpoints, and stop when no row is flagged
+``changed``.  Loops that halt on something else keep their own code:
+PageRank's message fold, katz/eigenvector/hits (a tolerance on a
+convergence reducer), SCC, k-core, SSSP, ANF, FastRP, Louvain and
+``wcc_two_phase`` (an edge-set checksum).  The reference's ``Algorithm``
+base class (``core/.../Algorithm.java:28-58``) is termination/progress
+plumbing only; users cannot bring their own superstep.
 
-``superstep_fixpoint`` extracts that loop.  The caller supplies only
-the per-superstep transformation; the engine supplies everything that
-makes it survive 10^12 edges: lazy lineage truncation (constant-size
-plans instead of exponentially growing ones), ``SuperstepCache``
+The engine supplies lazy lineage truncation, ``SuperstepCache``
 checkpoint retirement (O(1)-supersteps cache footprint), batched
-convergence checks (one driver job per ``check_interval`` lazily
-cached levels), AQE suspension around the loop, and optional durable
-``SuperstepCheckpointer`` saves with resume.
+convergence checks (one driver job per ``check_interval`` lazily cached
+levels), AQE suspension around the loop, and optional durable
+``SuperstepCheckpointer`` saves with resume.  A committed superstep is
+one Spark job: its changed count is collected by ``DataFrame.observe``
+inside the state write and lands in the ``metrics.jsonl`` row.
 
-Contract for ``step(state, iteration) -> DataFrame``:
+Contract for ``step(prev, iteration) -> DataFrame``:
 
-- must return a DataFrame with the same id/user columns plus a boolean
-  ``changed`` column (name configurable);
+- ``prev`` is the previous superstep's output, ``changed`` column
+  included, so a frontier step reads ``prev.filter("changed")``; the
+  first superstep of a run (fresh or resumed) sees every row changed;
+- must return the id/user columns plus a boolean ``changed`` column
+  (name configurable);
 - must be a *pure plan builder* — called once per superstep, no
   actions inside;
 - when ``check_interval > 1`` the step must be **idempotent at the
-  fixpoint** (a superstep applied to converged state changes nothing)
-  — the same requirement the built-in operators document for their
-  batched checks.
+  fixpoint** (a superstep applied to converged state changes nothing).
 """
 
 from __future__ import annotations
@@ -39,7 +41,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .checkpoint import (
@@ -71,68 +73,85 @@ def superstep_fixpoint(
 ) -> SuperstepResult:
     """Iterate ``step`` until no row has ``changed_col`` true (or
     ``max_iterations``).  Returns the final state WITHOUT the
-    ``changed`` column.
+    ``changed`` column; ``metrics`` holds one row per check boundary.
 
     ``partition_cols``: hash-partition the initial state on these
     columns (e.g. ``["id"]``) so a co-partitioned step plan stays
     exchange-free on the state side, like the built-in operators.
+
+    With a ``checkpointer`` every superstep is checked and every
+    ``checkpoint_interval``-th one committed; a rerun on the same
+    directory resumes from the last committed superstep.
     """
+    if max_iterations < 0:
+        raise ValueError(f"max_iterations must be >= 0, got {max_iterations}")
+    if check_interval < 1:
+        raise ValueError(f"check_interval must be >= 1, got {check_interval}")
+    if checkpoint_interval < 1:
+        raise ValueError(f"checkpoint_interval must be >= 1, got {checkpoint_interval}")
     spark = state.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     with aqe_suspended(spark):
         metrics: list[dict] = []
-        start_iter = 0
+        it = 0
         if checkpointer is not None:
             last = checkpointer.latest_iteration()
             if last is not None:
                 state = checkpointer.load(last, ["state"])["state"]
-                start_iter = last
+                it = last
                 metrics = checkpointer.metrics()
+        if changed_col in state.columns:
+            state = state.drop(changed_col)
         if partition_cols:
             state = state.repartition(n_part, *partition_cols)
         cache = SuperstepCache(spark)
         state = truncate_lineage(state)
         cache.track(state)
+        user_cols = state.columns
+        prev = state.withColumn(changed_col, F.lit(True))
 
-        it = start_iter
-        k = max(1, int(check_interval)) if checkpointer is None else 1
+        k = check_interval if checkpointer is None else 1
         pending: list[DataFrame] = []
         converged = False
-        user_cols = [c for c in state.columns if c != changed_col]
         while it < max_iterations:
             it += 1
             t0 = time.time()
-            nxt = step(state.select(*user_cols), it)
+            nxt = step(prev, it)
             if changed_col not in nxt.columns:
                 raise ValueError(
                     f"step() must return a '{changed_col}' boolean column; "
                     f"got {nxt.columns}"
                 )
+            row = {"algorithm": algorithm, "iteration": it}
             if checkpointer is not None and it % checkpoint_interval == 0:
-                nxt = checkpointer.save(
-                    it, {"state": nxt}, {"algorithm": algorithm}
-                )["state"]
+                # one job: the write, which also counts the changed rows
+                obs = Observation()
+                observed = nxt.observe(
+                    obs, F.count_if(F.col(changed_col)).alias("changed")
+                )
+
+                def observed_metrics(row=row, obs=obs, t0=t0) -> dict:
+                    row["changed"] = int(obs.get["changed"])
+                    row["wall_ms"] = int(1000 * (time.time() - t0))
+                    return row
+
+                nxt = checkpointer.save(it, {"state": observed}, observed_metrics)["state"]
             else:
                 nxt = truncate_lineage(nxt, eager=False)
             pending.append(nxt)
-            state = nxt
+            prev = nxt
             if it % k == 0 or it >= max_iterations:
-                changed = nxt.filter(F.col(changed_col)).count()
-                cache.track(*pending)  # batch materialized by the count
+                if "changed" not in row:  # not committed: count materializes
+                    row["changed"] = nxt.filter(F.col(changed_col)).count()
+                    row["wall_ms"] = int(1000 * (time.time() - t0))
+                cache.track(*pending)  # batch materialized: retire the previous
                 pending = []
-                metrics.append(
-                    {
-                        "algorithm": algorithm,
-                        "iteration": it,
-                        "changed": int(changed),
-                        "wall_ms": int(1000 * (time.time() - t0)),
-                    }
-                )
-                if changed == 0:
+                metrics.append(row)
+                if row["changed"] == 0:
                     converged = True
                     break
     return SuperstepResult(
-        state=state.select(*user_cols),
+        state=prev.select(*user_cols),
         iterations_ran=it,
         converged=converged,
         metrics=metrics,

@@ -62,6 +62,43 @@ def test_wcc_resume(spark, tmp_path):
     assert got == direct
 
 
+def test_durable_wcc_superstep_is_one_job(spark, tmp_path):
+    """A committed wcc superstep is one Spark job, the state write: its
+    changed count is observed inside the write and lands in the
+    metrics.jsonl row, so replayed and fresh rows carry the same count."""
+    vertices, edges = FX.wcc_lines_fixture(sets=2, set_size=8)
+    g = Graph.from_edge_list(spark, edges, vertices=vertices)
+    sc = spark.sparkContext
+
+    def jobs(group, iters):
+        ck = SuperstepCheckpointer(spark, str(tmp_path), "wcc", run_id=group)
+        sc.setJobGroup(group, group)
+        try:
+            res = wcc(g, max_iterations=iters, checkpointer=ck)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), res, ck
+
+    short, _, _ = jobs("wcc-2", 2)
+    long, res, ck = jobs("wcc-4", 4)
+    assert res.iterations_ran == 4 and long - short == 2
+    rows = ck.metrics()
+    assert [r["iteration"] for r in rows] == [1, 2, 3, 4]
+    assert [r["changed"] for r in rows] == [m["changed"] for m in res.metrics]
+    assert rows[0]["changed"] > 0
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{"checkpoint_interval": 0}, {"check_interval": 0}, {"max_iterations": -1}],
+)
+def test_bad_loop_arguments_raise(spark, tmp_path, kw):
+    g = Graph.from_edge_list(spark, [(0, 1), (1, 2)])
+    ck = SuperstepCheckpointer(spark, str(tmp_path), "wcc", run_id="bad")
+    with pytest.raises(ValueError):
+        wcc(g, checkpointer=ck, **kw)
+
+
 def test_checkpoint_gc_keeps_last(spark, f1_graph, tmp_path):
     ckpt = SuperstepCheckpointer(spark, str(tmp_path), "pagerank", run_id="g1", keep_last=2)
     pagerank(f1_graph, max_iterations=5, checkpointer=ckpt)
@@ -95,20 +132,25 @@ def test_labelprop_resume(spark, tmp_path):
     assert got == direct
 
 
-def test_k1coloring_resume_matches_direct(spark, tmp_path):
+@pytest.mark.parametrize(
+    "op, frame, col",
+    [("k1coloring", "colors", "color"), ("maximal_independent_set", "members", "in_set")],
+)
+def test_k1coloring_resume_matches_direct(spark, tmp_path, op, frame, col):
     import networkx as nx
 
-    from neo4j_graph_algorithms_spark.operators import k1coloring
+    from neo4j_graph_algorithms_spark import operators
 
+    run = getattr(operators, op)
     G = nx.gnm_random_graph(60, 180, seed=5)
     g = Graph.from_edge_list(spark, list(G.edges()), vertices=range(60))
-    direct = {r["id"]: r["color"] for r in k1coloring(g).colors.collect()}
+    direct = {r["id"]: r[col] for r in getattr(run(g), frame).collect()}
 
-    ckpt = SuperstepCheckpointer(spark, str(tmp_path), "k1c", run_id="c1")
-    k1coloring(g, max_iterations=1, checkpointer=ckpt)
-    ckpt2 = SuperstepCheckpointer(spark, str(tmp_path), "k1c", run_id="c1")
-    resumed = k1coloring(g, checkpointer=ckpt2)
-    got = {r["id"]: r["color"] for r in resumed.colors.collect()}
+    ckpt = SuperstepCheckpointer(spark, str(tmp_path), op, run_id="c1")
+    run(g, max_iterations=1, checkpointer=ckpt)
+    ckpt2 = SuperstepCheckpointer(spark, str(tmp_path), op, run_id="c1")
+    resumed = run(g, checkpointer=ckpt2)
+    got = {r["id"]: r[col] for r in getattr(resumed, frame).collect()}
     assert got == direct
 
 

@@ -20,11 +20,13 @@ def graph(spark, gnx):
     return Graph.from_edge_list(spark, list(gnx.edges()), vertices=range(150))
 
 
-def _user_wcc_step(both):
+def _user_wcc_step(both, frontier_only=False):
     def step(state, it):
+        # `state` carries the previous superstep's `changed` flags
+        senders = state.filter("changed") if frontier_only else state
         cand = (
             both.join(
-                state.select(F.col("id").alias("src"), "comp").hint("SHUFFLE_HASH"),
+                senders.select(F.col("id").alias("src"), "comp").hint("SHUFFLE_HASH"),
                 "src",
             )
             .groupBy(F.col("dst").alias("id"))
@@ -39,13 +41,14 @@ def _user_wcc_step(both):
     return step
 
 
-def test_user_wcc_matches_builtin(spark, graph):
+@pytest.mark.parametrize("frontier_only", [False, True])
+def test_user_wcc_matches_builtin(spark, graph, frontier_only):
     both = graph.edges.select("src", "dst").union(
         graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     init = graph.vertices.select("id", F.col("id").alias("comp"))
     res = superstep_fixpoint(
-        init, _user_wcc_step(both), max_iterations=100,
+        init, _user_wcc_step(both, frontier_only), max_iterations=100,
         check_interval=4, partition_cols=["id"], algorithm="user_wcc",
     )
     assert res.converged
